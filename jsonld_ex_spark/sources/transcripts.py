@@ -34,7 +34,8 @@ EPOCH = 1704067200  # 2024-01-01T00:00:00Z
 #
 # {conv_cte}/{conv_expr}/{part_key}/{li_rel}: the window partition key.
 # conv_id = concat('conv-', lpad(orderkey)) is a BIJECTION of l_orderkey
-# (orderkeys < 10^10 by the lpad width), so partitioning the row_number
+# while the orderkey renders in at most 10 characters (the lpad width;
+# the Spark rendering raises past it), so partitioning the row_number
 # window by either yields identical partition groups and identical
 # row_numbers.  The SPARK rendering computes conv_id in an inner
 # subquery and partitions the window by the conv_id COLUMN, so the one
@@ -100,6 +101,15 @@ FROM {range_rel}
 
 
 _CONV_EXPR = "concat('conv-', lpad(concat('', l_orderkey), 10, '0'))"
+# Spark rendering only (the DuckDB text must not change): lpad TRUNCATES
+# a rendering longer than 10 characters, so such an orderkey would share
+# its conv_id with another order.  Fail the row instead — a per-row check
+# inside the projection, no extra job.  NULL orderkeys still give NULL.
+_CONV_EXPR_CHECKED = (
+    "CASE WHEN length(concat('', l_orderkey)) > 10 THEN raise_error(concat("
+    "'l_orderkey ', l_orderkey, ' does not fit the 10-character conv_id'))"
+    f" ELSE {_CONV_EXPR} END"
+)
 
 
 def transcripts_sql(lineitem_rel: str, dialect: str, distribute: bool = True) -> str:
@@ -118,7 +128,7 @@ def transcripts_sql(lineitem_rel: str, dialect: str, distribute: bool = True) ->
         # exchange its window-pruned consumers never needed.
         dist = "  DISTRIBUTE BY conv_id\n" if distribute else ""
         conv_cte = (
-            f"conv_base AS (\n  SELECT {_CONV_EXPR} AS conv_id, *"
+            f"conv_base AS (\n  SELECT {_CONV_EXPR_CHECKED} AS conv_id, *"
             f"\n  FROM {lineitem_rel}\n{dist}), "
         )
         conv_expr, part_key, li_rel = "conv_id", "conv_id", "conv_base"

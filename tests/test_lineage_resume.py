@@ -4,6 +4,7 @@ single uninterrupted run's output exactly (incl. skolem ids)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -79,6 +80,56 @@ def test_resume_after_crash_inside_write_ledger_window(spark):  # noqa: F811
         assert a == b  # no duplicated triples from the partial write
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _never(df):
+    raise AssertionError("triples_fn must not be called")
+
+
+def test_all_buckets_done_runs_no_job(spark, tmp_path):  # noqa: F811
+    """With every bucket ledgered, the call returns from the ledger
+    alone: neither the input nor ``triples_fn`` is evaluated."""
+    out, led = str(tmp_path / "triples"), str(tmp_path / "ledger")
+    t = transcripts_df(spark, SF)
+    run_with_lineage(t, spark, conversation_triples, out, led, "run-a", n_buckets=4)
+    unreadable = t.withColumn("conv_id", F.raise_error(F.lit("input was evaluated")))
+    m = run_with_lineage(unreadable, spark, _never, out, led, "run-b", n_buckets=4)
+    assert m == {"buckets_processed": 0, "n_triples": 0, "resumed": True}
+    assert spark.read.parquet(led).count() == 4
+
+
+def test_first_run_over_empty_input_writes_no_ledger(spark, tmp_path):  # noqa: F811
+    out, led = str(tmp_path / "triples"), str(tmp_path / "ledger")
+    empty = transcripts_df(spark, SF).where(F.lit(False))
+    m = run_with_lineage(empty, spark, conversation_triples, out, led, "run-a", n_buckets=4)
+    assert m == {"buckets_processed": 0, "n_triples": 0, "resumed": True}
+    assert not os.path.exists(led)
+
+
+def test_write_bucketed_leaves_session_conf_alone(spark, tmp_path):  # noqa: F811
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    rows = spark.range(4).selectExpr("CAST(id AS STRING) AS conv_id", "CAST(id % 2 AS INT) AS _bucket")
+    write_bucketed(rows, str(tmp_path / "ok"), spark)
+    assert spark.conf.get(key) == before
+    failing = rows.withColumn("conv_id", F.raise_error(F.lit("write fails")))
+    with pytest.raises(Exception, match="write fails"):
+        write_bucketed(failing, str(tmp_path / "failed"), spark)
+    assert spark.conf.get(key) == before
+
+
+def test_corrupt_ledger_raises(spark, tmp_path):  # noqa: F811
+    """An unreadable ledger is an error, not "no ledger yet": reading
+    it as empty would rebuild every bucket and ledger it a second time."""
+    out, led = str(tmp_path / "triples"), str(tmp_path / "ledger")
+    os.makedirs(led)
+    with open(os.path.join(led, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="part-00000.parquet"):
+        run_with_lineage(transcripts_df(spark, SF), spark, conversation_triples, out, led, "run-a", n_buckets=4)
+    assert os.listdir(led) == ["part-00000.parquet"]
+    assert not os.path.exists(out)
 
 
 def test_salted_repartition_spreads_hot_subjects(spark):  # noqa: F811

@@ -13,11 +13,22 @@ import json
 import re
 from pathlib import Path
 
+import pytest
+
 from jsonld_ex_spark.core.context import Options, RemoteDocument
 from jsonld_ex_spark.core.errors import JsonLdError
 
 FIXTURE_DIR = Path("/root/reference/test/data/json-ld-api-tests")
 BASE_IRI = "https://w3c.github.io/json-ld-api/tests/"
+
+# The suite modules build their parameter lists from the manifests at
+# collection time; without the fixtures, skip each importing module
+# (reported per module) instead of failing its collection.
+if not FIXTURE_DIR.is_dir():
+    pytest.skip(
+        f"W3C JSON-LD API fixtures not found at {FIXTURE_DIR}; the suite's cases cannot be collected",
+        allow_module_level=True,
+    )
 
 
 def load_json(relpath: str):
