@@ -42,7 +42,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared input-spreading helper (functions/partitioning.py — also used
 # by ann_ops and the jsonld_ops document kernels)
-from jsonld_ex_spark.functions.partitioning import spread_input as _spread  # noqa: E402
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width, spread_input as _spread  # noqa: E402
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,21 +343,10 @@ def _connected_components(
     fault-tolerant production runs swap in reliable checkpointing via
     sparkContext.setCheckpointDir — same plan shape.)
 
-    The shuffle width is capped to core count for the supersteps:
-    localCheckpointed DataFrames report UnknownPartitioning, so every
-    superstep join/agg would otherwise re-shuffle at the session's
-    full width (hundreds of near-empty tasks per iteration at the
-    bench's 128 partitions) — the same sizing rule as
-    graph_paths._walk_fixed and property_paths.eval_path; the conf is
-    restored before returning."""
-    spark = labels.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    The supersteps run under ``capped_shuffle_width``
+    (functions/partitioning.py), like every iterative loop."""
+    with capped_shuffle_width(labels.sparkSession):
         return _cc_supersteps(labels, edges, max_iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _cc_supersteps(

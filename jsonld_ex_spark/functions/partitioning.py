@@ -9,9 +9,21 @@ stage alone was 7.8 s on one core).  The guard on the actual scan
 partition count makes it a no-op on a properly-split production table
 — no extra exchange at scale; the key is a deterministic column hash
 (never rand() — SPARK-38388 row-loss under retries).
+
+`capped_shuffle_width` is the iterative-loop sizing rule: closures,
+pointer-doubling walks and label propagation run over
+localCheckpointed inputs, which report UnknownPartitioning, so every
+superstep join or aggregate re-shuffles at the session's full
+``spark.sql.shuffle.partitions``.  Capping the width to the core count
+for the duration of an EAGER materialization sizes those shuffles to
+the superstep data; a plan returned lazily evaluates after the restore
+and is not capped.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,3 +39,18 @@ def spread_input(df: DataFrame, *keys: str) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, *[F.col(k) for k in keys])
+
+
+@contextmanager
+def capped_shuffle_width(spark) -> Iterator[None]:
+    """Cap ``spark.sql.shuffle.partitions`` at
+    ``max(defaultParallelism, 2)`` (never raising it) for the body,
+    and restore the previous value afterwards, also when the body
+    raises."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2))))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
+
 _VAR, _IRI, _LIT = "var", "iri", "lit"
 
 
@@ -2066,12 +2068,17 @@ def bgp_describe(
     obj, obj_is_iri) with set semantics — ``root`` attributes each
     triple to the described node whose closure pulled it in.
 
-    Scale shape: the bnode closure is the SEEDED pointer-doubling
-    closure (property_paths._seeded_closure) over the bnode-object edge
-    relation — O(log depth) supersteps even for rdf:list chains (a
-    conversation's CBD includes its whole @list spine), never
-    one-hop-per-level, and work proportional to the described nodes'
-    own closures, not the graph's."""
+    Scale shape: the bnode closure is the SEEDED closure
+    (property_paths._seeded_closure) over the bnode-object edge
+    relation.  Every object of that relation is a blank node, so when
+    the graph's blank nodes carry per-document labels (``_:<conv_id>.<n>``
+    from the KG pipeline) and no bnode→bnode edge crosses documents, the
+    closure is the label-local one: only the described documents'
+    edges are shuffled by label prefix, and one Arrow walk per document
+    is linear in its size (a conversation's CBD includes its whole
+    @list spine).  Otherwise it falls back to pointer doubling, O(log
+    depth) supersteps whose jump table doubles over EVERY blank-node
+    edge of the graph, not only the described nodes'."""
     from jsonld_ex_spark.operators.property_paths import _seeded_closure
 
     if isinstance(roots, DataFrame):
@@ -2084,11 +2091,7 @@ def bgp_describe(
         root_df = triples.sparkSession.createDataFrame(
             [(r,) for r in roots], "root string"
         )
-    spark = triples.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    with capped_shuffle_width(triples.sparkSession):
         bnode_edges = (
             triples.filter(F.col("obj_is_iri") & F.col("obj").startswith("_:"))
             .select(F.col("subj").alias("s"), F.col("obj").alias("o"))
@@ -2101,8 +2104,6 @@ def bgp_describe(
             .dropDuplicates()
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         reach.join(triples, reach["node"] == triples["subj"], "inner")
         .select("root", "subj", "pred", "obj", "obj_is_iri")

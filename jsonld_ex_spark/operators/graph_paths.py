@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 
@@ -89,22 +91,12 @@ def _walk_fixed(
     probe between supersteps.  Same frontier/jump recurrence as the
     detection loop (chain_positions), minus the per-round driver job.
 
-    The whole walk MATERIALIZES (eager final localCheckpoint) under a
-    TEMPORARILY CAPPED spark.sql.shuffle.partitions (core count):
-    frontier/jump tables are tiny relative to the triple table, but a
-    localCheckpointed DataFrame reports UnknownPartitioning, so every
-    superstep join/aggregate re-shuffles at the session's shuffle
-    partitions — at the bench's 128 (AQE coalescing off) that is ~6
-    supersteps x several shuffles x 128 near-empty tasks of pure
-    scheduling wall, plus an O(supersteps²)-partition re-scan of the
-    growing reach union.  Sizing the shuffle to the superstep data is
-    exactly what a production job does for iterative small-table
-    phases; the conf is restored before returning."""
-    spark = triples.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    The whole walk MATERIALIZES (eager final localCheckpoint) under
+    ``capped_shuffle_width`` (functions/partitioning.py): frontier/jump
+    tables are tiny relative to the triple table, and at the bench's
+    128 shuffle partitions each of ~6 supersteps would run several
+    shuffles of 128 near-empty tasks."""
+    with capped_shuffle_width(triples.sparkSession):
         edges = (
             triples.filter((F.col("pred") == rest_pred) & (F.col("obj") != nil))
             .select(
@@ -161,8 +153,6 @@ def _walk_fixed(
                 f"supersteps (positions >= {max_pos + 1} exist) — rest-chain "
                 "cycle or an underestimated known_max_length bound"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     firsts = triples.filter(F.col("pred") == first_pred).select(
         F.col("subj").alias("cell"), F.col("obj").alias("member")
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
 from jsonld_ex_spark.operators.kg_pipeline import MENTION_RE, kg_triples
 from jsonld_ex_spark.sources.transcripts import entity_dict_df, transcripts_df
 
@@ -805,24 +806,12 @@ _EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _capped_materialize(df: DataFrame) -> DataFrame:
-    """Materialize an iterative/analytics plan under a shuffle width
-    capped to core count (the r6 iterative-loop sizing rule, CLAUDE.md):
-    these plans run over localCheckpointed inputs (UnknownPartitioning),
-    so every join/aggregate would otherwise shuffle at the session's
-    full width — at the bench's 128 partitions that is many stages of
-    near-empty tasks over a 211-node entity graph.  The EAGER
-    localCheckpoint executes the plan INSIDE the capped window (a
-    lazily-returned plan evaluates after the conf restore and the cap
-    is a no-op — the kg_entity_pagerank lesson in CLAUDE.md);
+    """Materialize an iterative/analytics plan under
+    ``capped_shuffle_width`` (functions/partitioning.py): the EAGER
+    localCheckpoint executes the plan INSIDE the capped window, and
     consumers scan the materialized result."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    with capped_shuffle_width(df.sparkSession):
         return df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,11 +1122,12 @@ def kg_path_conv_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion): ``?conv v:turns/rdf:rest*/rdf:first ?turn`` — the
     idiomatic SPARQL form of "every turn of every conversation",
     traversing the @list encoding with a sequence path containing a
-    zero-or-more closure.  Exercises seq, star (path doubling to
-    fixpoint + the spec's zero-length-path-over-all-nodes semantics)
-    and set-semantics dedup; the DuckDB oracle evaluates the SAME path
-    AST with a WITH RECURSIVE fixpoint — two independent engines'
-    closures must agree pair-for-pair."""
+    zero-or-more closure.  The Spark side answers from the session's
+    shared chain walk (:func:`_conv_turn_path_rel`, the same pair set);
+    the generic evaluator (property_paths.eval_path) would run the
+    label-local seeded closure over these skolem-labelled cells.  The
+    DuckDB oracle evaluates the path AST with a WITH RECURSIVE
+    fixpoint — two independent engines must agree pair-for-pair."""
     from jsonld_ex_spark.operators.property_paths import path_select
 
     return path_select(
@@ -1501,10 +1491,13 @@ def kg_describe_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic ~1% sample).  Each conversation's CBD pulls its own
     triples plus — through the blank-node closure — its ENTIRE rdf:list
     spine (rest/first cells are blank nodes), so the description is the
-    full reassembly a SPARQL client expects; the closure runs the
-    pointer-doubled seeded frontier, O(log list-length) supersteps.
-    The DuckDB oracle recomputes the same CBD with a WITH RECURSIVE
-    bnode walk."""
+    full reassembly a SPARQL client expects.  The pipeline's skolem
+    labels keep every blank node inside its conversation, so the
+    closure takes the label-local path (property_paths._seeded_closure):
+    only the sampled conversations' edges are shuffled by
+    conversation and walked in Arrow, not O(log list-length) doubling
+    supersteps over the whole graph's blank-node edges.  The DuckDB
+    oracle recomputes the same CBD with a WITH RECURSIVE bnode walk."""
     from jsonld_ex_spark.operators.bgp import bgp_describe
     from jsonld_ex_spark.sources.transcripts import VOCAB
 

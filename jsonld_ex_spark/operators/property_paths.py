@@ -29,17 +29,29 @@ constants are out of scope for paths (join a normal BGP pattern for
 literal filtering); intermediate literals drop out naturally because a
 literal is never a subject.
 
-Scale shape: closures run PATH DOUBLING (R ∪ R∘R per superstep —
-all-pairs reachability over the path's edge set in ceil(log2 diameter)
-supersteps, NOT one-hop-per-round), with per-round set-dedup as the
+Scale shape: a seeded closure (``A/B+/C``, the rewritten ``A/B*/C``,
+and DESCRIBE's blank-node closure) first runs one cheap check over the
+closure's edge set: one aggregate, no join.  When every blank-node
+label is a per-document skolem label ``_:<p>.<n>``, every bnode→bnode
+edge keeps its prefix ``p``, and the edges never both leave and enter
+non-bnode nodes, every step after the first hop stays inside one
+document.  The closure is then LABEL-LOCAL: a semi-join keeps the
+edges of the prefixes that have a seed, one hash-repartition by ``p``
+sorted by ``p`` within each partition, and one ``mapInArrow``
+depth-first walk that builds one document's adjacency at a time:
+linear in each document, cycle-safe, and with Python memory bounded
+by the largest document.  When the check fails (``_:b0``-style
+N-Quads labels, IRI-celled lists, cross-document blank nodes) the
+seeded closure falls back to PATH DOUBLING, as does every standalone
+closure: R ∪ R∘R per superstep, all-pairs reachability over the
+path's edge set in ceil(log2 diameter) supersteps, NOT
+one-hop-per-round, with per-round set-dedup as the
 map-side-combinable aggregate and a count-fixpoint stop, so cyclic
 graphs terminate (the rdf:list pointer-doubling walker would raise on
 a cycle; reachability is well-defined on one).  Like graph_paths, the
-whole evaluation materializes under a temporarily capped
-spark.sql.shuffle.partitions — closure inputs (one predicate's edge
-set) are small relative to the triple table, and a localCheckpointed
-DataFrame reports UnknownPartitioning, so without the cap every
-superstep join/dedup re-shuffles at the session's full width.
+whole evaluation materializes under ``capped_shuffle_width``: closure
+inputs (one predicate's edge set) are small relative to the triple
+table.
 
 The DuckDB oracle mirror (:func:`path_oracle_sql`) compiles the same
 AST to plain SQL, with ``WITH RECURSIVE`` (UNION = set semantics)
@@ -49,8 +61,13 @@ doubling loop.
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
 
 _COMBINATORS = ("inv", "seq", "alt", "plus", "star", "opt", "neg")
 
@@ -135,27 +152,134 @@ def _closure(
     )
 
 
-def _seeded_closure(acc: DataFrame, e: DataFrame, max_iters: int) -> DataFrame:
-    """acc ∘ e+ WITHOUT the all-pairs closure: frontier doubling seeded
-    from acc's object side.  R_0 = acc∘e (one step); each round
-    R ← R ∪ R∘J and J ← J∘J (J starts as e, step size doubles), so
-    after k rounds R covers path lengths 1..2^k from the SEEDS only —
-    work is O(|pairs reachable from acc|), not O(all node pairs of
-    e's closure).  This is what makes ``A/B+/C`` (and the rewritten
-    ``A/B*/C``) linear in the answer at 10^12 triples: the conv→turn
-    list path touches each conversation's own cells, never the
-    cross-product of all cells."""
-    # rename-based joins throughout: acc/jump/r share lineage (the same
+# per-document skolem label "_:<prefix>.<ordinal>" (kg_pipeline labels
+# every blank node of a conversation "_:<conv_id>.<n>"); \A/\z, not
+# ^/$: Java's '$' also matches before a trailing newline
+_LABEL_RE = r"\A_:(.+)\.[0-9]+\z"
+
+
+def _label_prefix(col: str):
+    return F.regexp_extract(F.col(col), _LABEL_RE, 1)
+
+
+def _label_local(e: DataFrame) -> bool:
+    """True when a closure over ``e`` never leaves one label prefix
+    after its first hop, checked in one aggregate over ``e``:
+
+    (a) every blank-node endpoint has a label ``_:<p>.<digits>``;
+    (b) every bnode→bnode edge has the same ``p`` at both ends;
+    (c) no edge has a non-bnode subject, or none has a non-bnode object.
+
+    Blank nodes are told apart by the ``_:`` string prefix, because
+    the closure joins on strings.  Under (c) a non-bnode node reached
+    by the walk has no out-edge (or cannot be reached at all), so it
+    ends its path; under (b) every other step stays inside ``p``."""
+    bs, bo = F.col("s").startswith("_:"), F.col("o").startswith("_:")
+    ps, po = _label_prefix("s"), _label_prefix("o")
+    row = e.agg(
+        F.bool_or((bs & (ps == "")) | (bo & (po == ""))).alias("unlabelled"),
+        F.bool_or(bs & bo & (ps != po)).alias("cross"),
+        F.bool_or(~bs).alias("other_subj"),
+        F.bool_or(~bo).alias("other_obj"),
+    ).first()
+    return not (row.unlabelled or row.cross or (row.other_subj and row.other_obj))
+
+
+_WALK_BATCH = 8192
+
+
+def _walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body of the label-local closure.  A partition holds
+    whole label prefixes ``_k``, sorted by ``(_k, _seed)``: first a
+    prefix's edges ``(s, o)`` (subject in the prefix), then its seeds
+    ``(x, y)`` (object in the prefix).  Builds one prefix's adjacency
+    at a time, so Python memory is bounded by the largest document,
+    and emits ``(x, z)`` for every ``z`` reachable from ``y`` by zero
+    or more edges (a depth-first walk with a visited set per seed, so
+    cycles terminate)."""
+    key, adj = None, {}
+    out_s: list[str] = []
+    out_o: list[str] = []
+    for b in batches:
+        cols = b.to_pydict()
+        for k, s, o, is_seed in zip(cols["_k"], cols["s"], cols["o"], cols["_seed"]):
+            if k != key:
+                key, adj = k, {}
+            if not is_seed:
+                adj.setdefault(s, []).append(o)
+                continue
+            seen, stack = {o}, [o]
+            while stack:
+                for z in adj.get(stack.pop(), ()):
+                    if z not in seen:
+                        seen.add(z)
+                        stack.append(z)
+            out_s.extend([s] * len(seen))
+            out_o.extend(seen)
+            if len(out_s) >= _WALK_BATCH:
+                yield pa.RecordBatch.from_pydict({"s": out_s, "o": out_o})
+                out_s, out_o = [], []
+    if out_s:
+        yield pa.RecordBatch.from_pydict({"s": out_s, "o": out_o})
+
+
+def _compose(left: DataFrame, right: DataFrame) -> DataFrame:
+    # rename-based join: acc/jump/r share lineage (the same
     # checkpointed triple scan), and alias()-based self-joins over a
     # common LogicalRDD ancestor can fail attribute resolution at
     # checkpoint time (Catalyst 'key not found: s#N')
-    def _compose(left: DataFrame, right: DataFrame) -> DataFrame:
-        rr = right.select(F.col("s").alias("_js"), F.col("o").alias("_jo"))
-        return _dedup(
-            left.join(rr, F.col("o") == F.col("_js"), "inner")
-            .select("s", F.col("_jo").alias("o"))
-        )
+    rr = right.select(F.col("s").alias("_js"), F.col("o").alias("_jo"))
+    return _dedup(
+        left.join(rr, F.col("o") == F.col("_js"), "inner")
+        .select("s", F.col("_jo").alias("o"))
+    )
 
+
+def _local_closure(acc: DataFrame, e: DataFrame) -> DataFrame:
+    """acc ∘ e+ for a label-local ``e`` (:func:`_label_local`): the
+    first hop ``r0 = acc∘e`` as in the doubling loop, then one
+    hash-repartition by label prefix of the bnode-object seeds and of
+    the bnode-subject edges whose prefix has a seed, and one
+    :func:`_walk` per partition.  Seeds whose object is not a blank
+    node end their path under (c); they skip the walk, so they cannot
+    pile into one partition.  The final dedup is needed because one
+    node (``rdf:nil``) can be reached from many prefixes."""
+    r0 = _compose(acc, e)
+    is_bnode = F.col("o").startswith("_:")
+    seeds = r0.filter(is_bnode).select(
+        "s", "o", _label_prefix("o").alias("_k"), F.lit(True).alias("_seed")
+    )
+    edges = (
+        e.filter(F.col("s").startswith("_:"))
+        .select("s", "o", _label_prefix("s").alias("_k"), F.lit(False).alias("_seed"))
+        .join(seeds.select("_k").distinct(), "_k", "left_semi")
+    )
+    walked = (
+        seeds.unionByName(edges)
+        .repartition("_k")
+        .sortWithinPartitions("_k", "_seed")
+        .mapInArrow(_walk, "s string, o string")
+    )
+    return _dedup(r0.filter(~is_bnode).unionByName(walked))
+
+
+def _seeded_closure(acc: DataFrame, e: DataFrame, max_iters: int) -> DataFrame:
+    """acc ∘ e+ WITHOUT the all-pairs closure, seeded from acc's object
+    side.  When ``e`` is label-local (:func:`_label_local`, one
+    aggregate job) the closure is :func:`_local_closure`: a semi-join,
+    one shuffle and one Arrow walk, linear in each document.
+
+    Otherwise it falls back to frontier doubling: R_0 = acc∘e (one
+    step); each round R ← R ∪ R∘J and J ← J∘J (J starts as e, step size
+    doubles), so after k rounds R covers path lengths 1..2^k from the
+    SEEDS, in O(log depth) rounds of two eager localCheckpoints and a
+    count.  R stays restricted to the seeds' reach, but J∘J squares
+    EVERY edge of ``e`` each round, so the work grows with the whole
+    edge set's 2^k-step pairs, not with the answer: DESCRIBE of three
+    conversations doubles the jump table over every blank-node edge in
+    the graph.  ``max_iters`` bounds only this loop."""
+    if _label_local(e):
+        return _local_closure(acc, e)
     jump = _dedup(e).localCheckpoint(eager=True)
     r = _compose(acc, jump).localCheckpoint(eager=True)
     n = r.count()
@@ -321,19 +445,13 @@ def eval_path(
     the oracle keeps the direct form — agreement proves the rewrite."""
     _check(path)
     path = _rewrite(path)
-    spark = triples.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    with capped_shuffle_width(triples.sparkSession):
         # closures are eager (fixpoint counts), so the capped conf is
         # active for every superstep; the final relation materializes
         # here too so the caller's plan just scans it
         return _eval(
             triples, path, max_iters, allow_full_closure
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def source_table_fingerprint(table_dir: str) -> str:

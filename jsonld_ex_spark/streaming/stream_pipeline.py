@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
+
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -86,12 +88,10 @@ def _run_gated_transcript_stream(spark: SparkSession, sf_dir: str, start_query):
     (cleaned up at exit).
 
     While the gated stream runs, shuffle partitions are capped at the
-    session's core count: each micro-batch re-plans the full pipeline,
-    and at the bench's 128 shuffle partitions the per-batch Python
-    stage costs 128 task launches for 1/2 of an sf's rows — pure
-    scheduling wall.  Production streams size the trigger/partition
-    dials to the micro-batch volume for the same reason; the conf is
-    restored afterwards."""
+    session's core count (``capped_shuffle_width``): each micro-batch
+    re-plans the full pipeline, and at the bench's 128 shuffle
+    partitions the per-batch Python stage would cost 128 task launches
+    for half of an sf's rows."""
     import atexit
     import shutil
     import tempfile
@@ -101,17 +101,12 @@ def _run_gated_transcript_stream(spark: SparkSession, sf_dir: str, start_query):
     root = tempfile.mkdtemp(prefix="sgate_")
     in_dir, out_dir, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     transcripts_df(spark, sf_dir).repartition(16, "conv_id").write.parquet(in_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), spark.sparkContext.defaultParallelism))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    with capped_shuffle_width(spark):
         q = start_query(in_dir, out_dir, ckpt)
         try:
             q.awaitTermination(600)
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     shutil.rmtree(in_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     atexit.register(shutil.rmtree, root, ignore_errors=True)

@@ -32,9 +32,9 @@ def tiny(spark):  # noqa: F811
     )
 
 
-def _cte() -> str:
+def _cte(rows=TRIPLES) -> str:
     values = ", ".join(
-        f"('{s}', '{p}', '{o}', {str(i).lower()})" for s, p, o, i in TRIPLES
+        f"('{s}', '{p}', '{o}', {str(i).lower()})" for s, p, o, i in rows
     )
     return (
         "SELECT * FROM (VALUES " + values + ") AS v(subj, pred, obj, obj_is_iri)"
@@ -264,3 +264,182 @@ def test_materialized_closure_build_reuse_and_staleness(spark, tmp_path):  # noq
     cdir2 = ensure_path_closure(spark, tdir, "pplus", ("plus", "p"))
     pairs2 = _pairs(read_path_closure(spark, cdir2))
     assert ("d", "f") in pairs2 and pairs1 < pairs2
+
+
+# --- label-local closure vs the doubling fallback ---------------------------
+
+from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+V = "urn:v:"
+NIL = "http://www.w3.org/1999/02/22-rdf-syntax-ns#nil"
+LIST_PATHS = [
+    ("seq", f"{V}turns", ("star", f"{V}rest"), f"{V}first"),
+    ("seq", f"{V}turns", ("plus", f"{V}rest")),
+]
+_SCHEMA = "subj string, pred string, obj string, obj_is_iri boolean"
+
+
+def _conv(doc: str, cells: list[str], extra=()) -> list[tuple]:
+    """Conversation ``urn:c:<doc>`` whose rdf:list-shaped spine runs
+    through ``cells`` to rdf:nil; ``extra`` adds (i, j) rest edges
+    between cells (cycles, branches)."""
+    rows = [(f"urn:c:{doc}", f"{V}turns", cells[0] if cells else NIL, True)]
+    for i, c in enumerate(cells):
+        rows.append((c, f"{V}first", f"urn:t:{doc}.{i}", True))
+        rows.append((c, f"{V}rest", cells[i + 1] if i + 1 < len(cells) else NIL, True))
+    rows += [(cells[i], f"{V}rest", cells[j], True) for i, j in extra]
+    return rows
+
+
+def _bn(doc: str, n: int) -> list[str]:
+    return [f"_:{doc}.{i}" for i in range(n)]
+
+
+def _closure_runs(spark, rows, monkeypatch):
+    """Evaluate every LIST_PATHS path and a DESCRIBE of every
+    conversation twice: as shipped (recording what the label-local
+    check decided) and with the check forced off (the doubling loop).
+    Returns (decisions, shipped results, doubling results)."""
+    from jsonld_ex_spark.operators import property_paths
+    from jsonld_ex_spark.operators.bgp import bgp_describe
+
+    df = spark.createDataFrame(rows, _SCHEMA)
+    roots = sorted({s for s, p, _, _ in rows if p == f"{V}turns"})
+    check = property_paths._label_local
+    decisions = []
+
+    def spy(e):
+        decisions.append(check(e))
+        return decisions[-1]
+
+    def run():
+        out = [set(_pairs(eval_path(df, p))) for p in LIST_PATHS]
+        out.append(set(tuple(r) for r in bgp_describe(df, roots).collect()))
+        return out
+
+    # keep every shuffle partition: coalesced into one, a walk would
+    # see all prefixes at once and hide a routing error
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(property_paths, "_label_local", spy)
+            shipped = run()
+        with monkeypatch.context() as m:
+            m.setattr(property_paths, "_label_local", lambda e: False)
+            doubling = run()
+    finally:
+        spark.conf.set(key, prev)
+    return decisions, shipped, doubling
+
+
+LOCAL_GRAPH = (
+    _conv("a", _bn("a", 3))                       # plain list
+    + _conv("b", _bn("b", 1))                     # one-cell list
+    + _conv("c", _bn("c", 3), extra=[(2, 0)])     # cycle back to the head
+    + _conv("d", _bn("d", 3), extra=[(0, 2)])     # branching cell
+    + _conv("e", [])                              # empty list: turns -> nil
+    + [("urn:c:f", f"{V}turns", "_:f.0", True),   # seed whose next hop is an IRI
+       ("_:f.0", f"{V}rest", "urn:cell:f", True)]
+)
+
+
+def test_label_local_closure_matches_doubling(spark, monkeypatch):  # noqa: F811
+    """Every closure over a label-local graph takes the local path and
+    returns exactly the doubling loop's (s, o) sets, for the list
+    paths and for DESCRIBE; the list paths also match DuckDB."""
+    decisions, shipped, doubling = _closure_runs(spark, LOCAL_GRAPH, monkeypatch)
+    assert decisions == [True, True, True]  # two list paths, DESCRIBE
+    assert shipped == doubling
+    assert ("urn:c:c", "_:c.0") in shipped[1]  # the cycle reaches its head
+    assert ("urn:c:f", "urn:cell:f") in shipped[1]  # IRI-object terminal
+    for path, got in zip(LIST_PATHS, shipped):
+        assert sorted(got) == _duck(path_oracle_sql(_cte(LOCAL_GRAPH), "?s", path, "?o"))
+
+
+FALLBACK_GRAPHS = {
+    # one bnode->bnode edge crossing from prefix a to prefix g, through
+    # a chain of six prefixes, so the walk would have to leave its
+    # partition
+    "cross_prefix": _conv("a", _bn("a", 2))
+    + _conv("g", ["_:g.0", "_:h.0", "_:i.0", "_:j.0", "_:k.0", "_:l.0"])
+    + [("_:a.1", f"{V}rest", "_:g.0", True)],
+    # N-Quads style labels carry no document prefix
+    "unprefixed": _conv("a", ["_:b0", "_:b1", "_:b2"]),
+    # IRI cells: the rest edges have IRI subjects AND IRI objects
+    "iri_cells": _conv("a", ["urn:cell:0", "urn:cell:1"]) + _conv("b", _bn("b", 2)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FALLBACK_GRAPHS))
+def test_non_local_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # noqa: F811
+    """A graph that breaks any of the three checks must take the
+    doubling loop; the cross-prefix case is built so that a check
+    without (b) would route the chain to several partitions and lose
+    reachability."""
+    decisions, shipped, doubling = _closure_runs(
+        spark, FALLBACK_GRAPHS[name], monkeypatch
+    )
+    list_decisions = decisions[:2]
+    assert list_decisions == [False, False]
+    if name != "iri_cells":  # DESCRIBE never follows IRI cells
+        assert decisions[2] is False
+    assert shipped == doubling
+    if name == "cross_prefix":
+        assert ("urn:c:a", "_:l.0") in shipped[1]
+
+
+@st.composite
+def _graph(draw):
+    """A few conversations with random list lengths and random extra
+    intra-document rest edges; optionally one perturbation that must
+    force the fallback."""
+    rows = []
+    for d in range(draw(st.integers(1, 4))):
+        n = draw(st.integers(0, 5))
+        extra = (
+            draw(st.lists(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)), max_size=3))
+            if n else []
+        )
+        rows += _conv(f"d{d}", _bn(f"d{d}", n), extra)
+    cells = [s for s, p, _, _ in rows if p == f"{V}first"]
+    kind = draw(st.sampled_from(["local", "local", "cross", "unprefixed"]))
+    if kind == "cross" and cells:
+        rows.append((draw(st.sampled_from(cells)), f"{V}rest", "_:zz.0", True))
+        rows.append(("_:zz.0", f"{V}first", "urn:t:zz", True))
+    elif kind == "unprefixed" and cells:
+        rows.append((draw(st.sampled_from(cells)), f"{V}rest", "_:b0", True))
+    else:
+        kind = "local"
+    return kind, sorted(set(rows))
+
+
+@given(_graph())
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_property_label_local_matches_doubling(spark, monkeypatch, case):  # noqa: F811
+    """Random label-local graphs (cycles, branches, empty and one-cell
+    lists) and random perturbed ones: the shipped closure equals the
+    doubling loop, and the check decides as the construction says."""
+    kind, rows = case
+    decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
+    assert decisions[:2] == [kind == "local"] * 2
+    assert shipped == doubling
+
+
+def test_capped_shuffle_width_restores_on_raise(spark):  # noqa: F811
+    from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with pytest.raises(RuntimeError, match="body"):
+        with capped_shuffle_width(spark):
+            cap = int(spark.conf.get(key))
+            assert cap == min(int(before), max(spark.sparkContext.defaultParallelism, 2))
+            raise RuntimeError("body")
+    assert spark.conf.get(key) == before
