@@ -50,7 +50,7 @@ triple table that is N column-pruned parquet scans with pushed
 filters — exactly what you want.  The self-contained gate queries
 instead run the construction pipeline once and ``localCheckpoint`` the
 triples so the pattern joins read the materialized result instead of
-re-running the Python stage per pattern (same trick as
+re-running the pipeline per pattern (same trick as
 dedup_ops._connected_components; cache() would not truncate lineage).
 """
 

@@ -11,21 +11,26 @@ Spark-first layout (north_star architecture):
    aggregation; turn ordering restored by sort_array on the leading
    turn_idx field (per-row invariant: per-turn text equality under
    stable (conv_id, turn_idx) ordering);
-4. fused expand→flatten→toRdf — a single ``mapInPandas`` stage: one
-   Arrow batch of assembled conversations in, triple rows out.  The
-   JSON-LD algorithms (jsonld_ex_spark.core) run per document with a
-   shared preprocessed context (processed once per executor, module
-   cache — the reference reprocesses @context per document); blank
+4. triple rendering — one Catalyst projection (``transform``/``filter``/
+   ``flatten`` + ``inline``) in the stage that holds the conv_id
+   exchange: every document shares one template (CONV_CONTEXT +
+   build_conversation_doc), so expand→flatten→toRdf is partially
+   evaluated into the rows it always yields — no Python worker.  Blank
    nodes are skolemized deterministically per (conv_id, ordinal) so ids
-   are stable across retries/re-runs;
+   are stable across retries/re-runs.  The generic algorithms
+   (jsonld_ex_spark.core, with a context processed once per executor)
+   stay as the reference kernel ``_extract_triples``, which the
+   differential tests run against this rendering;
 5. optional salted repartition on subject hash before the sink (hot
    entities concentrate subjects; salt defuses skew at 10^12-turn
    scale — see triples.salted_repartition).
 
-Reference parity: the expand/flatten/toRdf semantics are exactly the
-W3C algorithms the reference implements (lib/json/ld/expansion.ex,
-flattening.ex, decoder.ex) — validated against the W3C suite in
-tests/test_w3c_*.py and against a relational DuckDB oracle end-to-end.
+Reference parity: the reference kernel's expand/flatten/toRdf semantics
+are exactly the W3C algorithms the reference implements
+(lib/json/ld/expansion.ex, flattening.ex, decoder.ex) — validated against
+the W3C suite in tests/test_w3c_*.py; the pipeline's rendering is checked
+against that kernel row for row and against a relational DuckDB oracle
+end-to-end.
 """
 
 from __future__ import annotations
@@ -48,6 +53,7 @@ from jsonld_ex_spark.core.context import Context, Options, process_context
 from jsonld_ex_spark.core.errors import JsonLdError
 from jsonld_ex_spark.core.expansion import expand as expand_algo
 from jsonld_ex_spark.core.flattening import BlankNodeGenerator, node_map
+from jsonld_ex_spark.core.rdf import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, XSD_INTEGER, XSD_STRING
 from jsonld_ex_spark.core.to_rdf import to_rdf_from_node_map
 from jsonld_ex_spark.sources.transcripts import (
     CONV_NS,
@@ -165,7 +171,10 @@ def doc_to_triple_rows(conv_id: str, doc: dict, active: Context, options: Option
 
 
 def _extract_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: assembled conversations → triple rows.
+    """The reference kernel, a mapInPandas body: assembled conversations
+    (turns as JSON) → triple rows through the generic JSON-LD algorithms.
+    The pipeline renders the same rows in Catalyst (conversation_triples);
+    this is the path that rendering is tested against.
 
     Each Arrow batch's rows are accumulated as one list of 9-field row
     tuples (``doc_to_triple_rows`` emits tuples) and become one
@@ -232,15 +241,95 @@ def assemble_conversations(transcripts: DataFrame) -> DataFrame:
     )
 
 
+# A conv_id whose IRIs toRdf drops (``core.iri.is_well_formed_iri``): a
+# raw character outside the IRI grammar, or a second '#' (a '#' inside
+# the fragment).  Both IRIs of a conversation carry the conv_id verbatim
+# and no other '#', so the reference kernel emits no row for it at all.
+_ILL_FORMED_CONV_ID = r'[\x00-\x20<>"{}|\\^`]|#[^#]*#'
+
+
+def _triple(subj: str, pred: str, obj: str, dt: str | None, turn_idx: str) -> str:
+    """One triple of the template as a SQL struct; only literals carry a
+    datatype."""
+    dt_sql = "CAST(NULL AS STRING)" if dt is None else f"'{dt}'"
+    return (
+        f"named_struct('subj', {subj}, 'pred', '{pred}', 'obj', {obj}, "
+        f"'obj_is_iri', {str(dt is None).lower()}, 'obj_dt', {dt_sql}, "
+        f"'turn_idx', CAST({turn_idx} AS INT))"
+    )
+
+
+def _cell(i: str) -> str:
+    """Skolem label of list cell ``i``, as the reference kernel's blank
+    node generator numbers them (cells are its only blank nodes)."""
+    return f"concat('_:', conv_id, '.', CAST({i} AS STRING))"
+
+
+_CONV_IRI = f"concat('{CONV_NS}', conv_id)"
+
+# The triples doc_to_triple_rows derives from build_conversation_doc +
+# CONV_CONTEXT, as one array per assembled conversation (SQL text: one
+# JVM parse per call instead of hundreds of Column round trips).  Each
+# turn ``p`` carries its position ``i`` in the sorted turns (list cell
+# i), its IRI and its row lineage (_lineage_turn_idx: NULL for a
+# negative turn_idx).  A NULL role/tool/ts yields a NULL obj and its row
+# is dropped; a NULL text is "" (to_json drops the field, the kernel
+# reads .get("text", "")) and NULL mentions are none.
+_TEMPLATE_ROWS_SQL = f"""filter(concat(
+  array(
+    {_triple(_CONV_IRI, RDF_TYPE, f"'{VOCAB}Conversation'", None, "NULL")},
+    {_triple(_CONV_IRI, f"{VOCAB}turns", _cell("0"), None, "NULL")}),
+  flatten(transform(
+    transform(turns, (t, i) -> named_struct(
+      't', t, 'i', i,
+      'iri', concat('urn:turn:', conv_id, ':', CAST(t.turn_idx AS STRING)),
+      'lineage', IF(t.turn_idx >= 0, t.turn_idx, NULL))),
+    p -> concat(
+      array(
+        {_triple(_cell("p.i"), RDF_FIRST, "p.iri", None, "p.i")},
+        {_triple(_cell("p.i"), RDF_REST,
+                 f"IF(p.i + 1 < size(turns), {_cell('p.i + 1')}, '{RDF_NIL}')", None, "p.i")},
+        {_triple("p.iri", RDF_TYPE, f"'{VOCAB}Turn'", None, "p.lineage")},
+        {_triple("p.iri", f"{VOCAB}turn_idx", "CAST(p.t.turn_idx AS STRING)", XSD_INTEGER, "p.lineage")},
+        {_triple("p.iri", f"{VOCAB}role", "p.t.role", XSD_STRING, "p.lineage")},
+        {_triple("p.iri", f"{VOCAB}text", "coalesce(p.t.text, '')", XSD_STRING, "p.lineage")},
+        {_triple("p.iri", f"{VOCAB}tool", "p.t.tool", XSD_STRING, "p.lineage")},
+        {_triple("p.iri", f"{VOCAB}ts", "p.t.ts_str", XSD_DATETIME, "p.lineage")}),
+      transform(array_distinct(coalesce(p.t.mentions, array())), m ->
+        {_triple("p.iri", f"{VOCAB}mentions", f"concat('{ENTITY_NS}E', substr(m, 5))", None, "p.lineage")}))))),
+  r -> r.obj IS NOT NULL)"""
+
+# A repeated turn_idx is one node to the reference kernel: its rows
+# merge.  Dedup only then, because array_distinct compares structs
+# pairwise (quadratic in the conversation's rows); the int-array test
+# is linear.
+_DEDUP_SQL = """CASE WHEN size(array_distinct(transform(turns, t -> t.turn_idx))) < size(turns)
+  THEN array_distinct(rows) ELSE rows END"""
+
+
 def conversation_triples(transcripts: DataFrame) -> DataFrame:
     """Full pipeline: transcript turns → RDF triple DataFrame.
 
-    The assembled turns cross the JVM→Python boundary as one JSON string
-    per conversation (see _extract_triples for the measured rationale)."""
-    assembled = assemble_conversations(transcripts).select(
-        "conv_id", F.to_json("turns").alias("turns_json")
+    The pipeline's documents all share one template, so their triples
+    are rendered by Catalyst from the assembled rows
+    (``_TEMPLATE_ROWS_SQL``) in the stage that holds the conv_id
+    exchange: no Python worker.  It reproduces the reference kernel
+    ``_extract_triples`` row for row (tests/test_kg_pipeline.py runs
+    both); this template cannot raise a ``JsonLdError``, so there is no
+    quarantine row."""
+    # rlike is NULL on a NULL conv_id: that conversation is dropped too
+    assembled = assemble_conversations(transcripts).where(
+        ~F.col("conv_id").rlike(_ILL_FORMED_CONV_ID)
     )
-    return assembled.mapInPandas(_extract_triples, schema=TRIPLE_SCHEMA)
+    null = F.lit(None).cast("string")
+    return (
+        assembled.select("conv_id", "turns", F.expr(_TEMPLATE_ROWS_SQL).alias("rows"))
+        .select("conv_id", F.inline(F.expr(_DEDUP_SQL)))
+        .select(
+            "subj", "pred", "obj", "obj_is_iri", "obj_dt", null.alias("obj_lang"),
+            null.alias("graph"), "conv_id", "turn_idx",
+        )
+    )
 
 
 def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:

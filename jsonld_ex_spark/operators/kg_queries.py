@@ -90,7 +90,7 @@ def kg_triple_stats_from_table(spark: SparkSession, table_path: str) -> DataFram
     triple table (write_triples → scan).  Identical output to the gate
     form (tests/test_kg_pipeline.py proves persisted == recomputed);
     at 100 TB the difference is one partial+final hash aggregate over a
-    column-pruned parquet scan vs re-running the whole Python pipeline."""
+    column-pruned parquet scan vs re-running the whole pipeline."""
     return _triple_stats(
         spark.read.parquet(table_path).select("pred", "subj")
     )
@@ -332,7 +332,7 @@ _ASSEMBLED_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 def _checkpointed_assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session shared ASSEMBLED conversations (the groupBy +
-    sort_array(collect_list) stage, pre-Python): kg_frame_tool_turns
+    sort_array(collect_list) stage, before any rendering): kg_frame_tool_turns
     and kg_roundtrip_check each run their own per-document algorithm
     stack but share the identical assembly prefix — materialize it once
     per (session, sf_dir), same rationale and keying as
@@ -356,7 +356,7 @@ def _checkpointed_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-contained gate form: run the construction pipeline ONCE PER
     PROCESS per (session, sf_dir) and localCheckpoint the triples so
     every gate query in the BGP/analytics/stats family scans the same
-    materialized table instead of re-running the Python stage per query
+    materialized table instead of re-running the pipeline per query
     (cache() would not truncate lineage — CLAUDE.md).  This is exactly
     the production shape — write the triple table once, every downstream
     query scans it — expressed inside the driver's self-containment
@@ -573,9 +573,10 @@ def _delta_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     """The deterministic (new, old) triple tables of the delta scenario,
     built ONCE per (session, sf_dir): kg_triples_delta and
     kg_triples_delta_snapshot derive the identical two graphs, and each
-    pipeline run is the expensive Python stage — four runs per bench/
-    gate session before this memo, two after (same rationale and
-    lifecycle as _checkpointed_triples)."""
+    derivation is a full pipeline run (transcript window, conv_id
+    shuffle, triple rendering) — four runs per bench/gate session
+    before this memo, two after (same rationale and lifecycle as
+    _checkpointed_triples)."""
     from pyspark.sql import Window
 
     from jsonld_ex_spark.operators.kg_pipeline import conversation_triples
@@ -627,7 +628,7 @@ def kg_triples_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed by subject make the two anti-joins co-partitioned
     (zero-shuffle); here both sides are pipeline runs over a
     deterministic 25% conv subset, localCheckpointed so each side's
-    Python stage executes exactly once across the two anti-joins.
+    pipeline executes exactly once across the two anti-joins.
 
     Dropping a conversation's last turn removes the old rdf:rest→nil
     cell triple and adds the whole new turn (type/role/text/ts/

@@ -153,14 +153,16 @@ def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    li.createOrReplaceTempView("_li_src")
     # same under-partitioned-input guard as partitioning.spread_input:
     # only force the source-side conv_id exchange when the scan would
     # otherwise run single-threaded (the one-file test corpus); a
     # well-split production table keeps its natural partitioning and
     # the window plans its own exchange where needed
     under = li.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    return spark.sql(transcripts_sql("_li_src", "spark", distribute=under))
+    # the source is bound per call (spark.sql registers it under a unique
+    # name and drops it after analysis), not as a fixed session-global
+    # temp view another thread could re-point between register and read
+    return spark.sql(transcripts_sql("{li}", "spark", distribute=under), li=li)
 
 
 def transcripts_oracle_cte(lineitem_rel: str = "lineitem") -> str:
@@ -169,8 +171,9 @@ def transcripts_oracle_cte(lineitem_rel: str = "lineitem") -> str:
 
 
 def entity_dict_df(spark: SparkSession) -> DataFrame:
-    spark.range(N_ENTITIES).createOrReplaceTempView("_ent_range")
-    return spark.sql(_ENTITY_DICT_SQL.format(id_col="id", range_rel="_ent_range", entity_ns=ENTITY_NS))
+    return spark.sql(_ENTITY_DICT_SQL.format(
+        id_col="id", range_rel=f"range({N_ENTITIES})", entity_ns=ENTITY_NS
+    ))
 
 
 def entity_dict_oracle_sql() -> str:

@@ -4,7 +4,7 @@ The reference is a batch document processor (no streaming); this is the
 engine's scale path for continuously-arriving transcripts: a file/Iceberg
 stream of completed conversations, processed with the SAME batch
 operators via ``foreachBatch`` (the standard pattern when a micro-batch
-needs a multi-stage batch plan: groupBy + mapInPandas + partitioned
+needs a multi-stage batch plan: groupBy + triple rendering + partitioned
 write).  Checkpointing is Spark's streaming checkpoint (exactly-once
 per micro-batch into the sink) layered over the same deterministic
 skolemization, so replays are idempotent at the row level too.
@@ -90,7 +90,7 @@ def _run_gated_transcript_stream(spark: SparkSession, sf_dir: str, start_query):
     While the gated stream runs, shuffle partitions are capped at the
     session's core count (``capped_shuffle_width``): each micro-batch
     re-plans the full pipeline, and at the bench's 128 shuffle
-    partitions the per-batch Python stage would cost 128 task launches
+    partitions the per-batch rendering stage would cost 128 task launches
     for half of an sf's rows."""
     import atexit
     import shutil

@@ -15,12 +15,13 @@ SF = "/root/testdata/sf0.001"
 
 COMMENT = {
     "kg_triples": (
-        "ONE wide shuffle for conversation assembly (Exchange "
-        "hashpartitioning(conv_id)) with map-side partial aggregation "
-        "(the upstream Exchange+Sort+Window belongs to the transcript "
-        "SYNTHESIS — absent when reading a real transcript table), "
-        "JSON-string Arrow transfer, ONE MapInPandas, no BatchEvalPython. "
-        "Python appears exactly once per triple."
+        "ONE wide shuffle (Exchange hashpartitioning(conv_id), made "
+        "explicit at the source by the transcript synthesis): the "
+        "row_number Window, the map-side partial aggregation, the "
+        "conversation assembly and the triple rendering all reuse it.  "
+        "The triples come from ONE Generate inline(...) over the "
+        "assembled turns (the fixed JSON-LD template compiled to "
+        "transform/filter/flatten): no MapInPandas, no Python stage."
     ),
     "kg_entity_links": "BroadcastHashJoin for the entity dictionary (small dim side).",
     "dedup_minhash_lsh": (

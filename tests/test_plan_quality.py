@@ -2,8 +2,8 @@
 
 Asserts the plans we designed for are the plans Catalyst actually picks:
 filter/column pushdown into the parquet scan, broadcast hash join for
-the entity dictionary, exactly ONE wide shuffle feeding the Python
-stage, and no Python UDFs anywhere except the single fused mapInPandas.
+the entity dictionary, exactly ONE wide shuffle in the KG pipeline with
+no Python stage at all, and no row-at-a-time Python UDFs anywhere.
 """
 
 from __future__ import annotations
@@ -47,17 +47,16 @@ def test_entity_links_uses_broadcast_hash_join(spark):  # noqa: F811
 
 def test_pipeline_has_single_wide_shuffle_before_python(spark):  # noqa: F811
     plan = _plan(kg_triples(spark, SF))
-    # exactly one hashpartitioning exchange on conv_id feeds the python
-    # stage (the window in transcript synthesis partitions by l_orderkey)
+    # exactly one hashpartitioning exchange on conv_id: the transcript
+    # window, the assembly and the triple rendering all share it
     exchanges = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
-    assert len(exchanges) <= 2, plan  # window(l_orderkey) + groupBy(conv_id)
+    assert len(exchanges) <= 2, plan
     conv_exchanges = [l for l in exchanges if "conv_id" in l]
     assert len(conv_exchanges) == 1, exchanges
     # partial aggregation happens map-side before that shuffle
     assert plan.count("HashAggregate") >= 2 or "ObjectHashAggregate" in plan
-    # one python stage, Arrow-based
-    assert plan.count("MapInPandas") == 1
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
+    # the triples are rendered in Catalyst: no Python stage of any kind
+    assert "MapInPandas" not in plan and "Python" not in plan, plan
 
 
 def test_transcript_synthesis_is_pure_catalyst(spark):  # noqa: F811
