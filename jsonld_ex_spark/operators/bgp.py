@@ -2068,23 +2068,28 @@ def bgp_describe(
     obj, obj_is_iri) with set semantics — ``root`` attributes each
     triple to the described node whose closure pulled it in.
 
-    Scale shape: the bnode closure is the SEEDED closure
-    (property_paths._seeded_closure) over the bnode-object edge
-    relation.  Every object of that relation is a blank node, so when
-    the graph's blank nodes carry per-document labels (``_:<conv_id>.<n>``
-    from the KG pipeline) and no bnode→bnode edge crosses documents, the
-    closure is the label-local one: only the described documents'
-    edges are shuffled by label prefix, and one Arrow walk per document
-    is linear in its size (a conversation's CBD includes its whole
-    @list spine).  Otherwise it falls back to pointer doubling, O(log
-    depth) supersteps whose jump table doubles over EVERY blank-node
-    edge of the graph, not only the described nodes'."""
+    Scale shape: the reach is ``roots ∘ bnode_edges*``, the SEEDED star
+    closure (property_paths._seeded_closure) over the bnode-object edge
+    relation, starting from the (root, root) pairs.  Every object of
+    that relation is a blank node, so when the graph's blank nodes
+    carry per-document labels (``_:<conv_id>.<n>`` from the KG
+    pipeline) and no bnode→bnode edge crosses documents, the closure is
+    the label-local one: one left join takes each root's first hop and
+    keeps the root itself, and the result feeds one shuffle by label
+    prefix and one Arrow walk per document, linear in its size (a
+    conversation's CBD includes its whole @list spine).  The roots are
+    evaluated once in that plan, and a root bound many times (the bag
+    output of bgp_select) is walked once per document.
+    Otherwise it falls back to pointer doubling, O(log depth)
+    supersteps whose jump table doubles over EVERY blank-node edge of
+    the graph, not only the described nodes'.  Set semantics come from
+    the final ``dropDuplicates``."""
     from jsonld_ex_spark.operators.property_paths import _seeded_closure
 
     if isinstance(roots, DataFrame):
         if len(roots.columns) != 1:
             raise ValueError("roots DataFrame must have exactly one column")
-        root_df = roots.toDF("root").dropDuplicates()
+        root_df = roots.toDF("root")
     else:
         if not roots:
             raise ValueError("empty DESCRIBE")
@@ -2097,11 +2102,9 @@ def bgp_describe(
             .select(F.col("subj").alias("s"), F.col("obj").alias("o"))
         )
         seed = root_df.select(F.col("root").alias("s"), F.col("root").alias("o"))
-        closure = _seeded_closure(seed, bnode_edges, max_iters)
         reach = (
-            seed.unionByName(closure)
+            _seeded_closure(seed, bnode_edges, max_iters, star=True)
             .select(F.col("s").alias("root"), F.col("o").alias("node"))
-            .dropDuplicates()
             .localCheckpoint(eager=True)
         )
     return (

@@ -20,38 +20,42 @@ without angle brackets):
 * ``("neg", iri, …)``    — ``!(p1|p2)``  negated property set
                            (forward-only, IRI leaves)
 
-Semantics: SET semantics at every node (SPARQL defines arbitrary-length
-paths as node-pair reachability, not bags; applying distinct uniformly
-keeps the Spark plan and the DuckDB oracle exactly comparable).  The
+Semantics: SET semantics (SPARQL defines arbitrary-length paths as
+node-pair reachability, not bags), enforced ONCE, at
+:func:`eval_path`'s output: leaves, joins and unions inside a path keep
+duplicates, because a dedup per AST node costs a shuffle each and the
+output dedup removes them all.  Only the doubling loops deduplicate per
+round, because their count fixpoint needs set semantics.  The
 zero-length path (star/opt) relates every node of the GRAPH to itself,
 per the spec — "nodes" = all subjects and objects.  Terminal literal
 constants are out of scope for paths (join a normal BGP pattern for
 literal filtering); intermediate literals drop out naturally because a
 literal is never a subject.
 
-Scale shape: a seeded closure (``A/B+/C``, the rewritten ``A/B*/C``,
-and DESCRIBE's blank-node closure) first runs one cheap check over the
-closure's edge set: one aggregate, no join.  When every blank-node
-label is a per-document skolem label ``_:<p>.<n>``, every bnode→bnode
-edge keeps its prefix ``p``, and the edges never both leave and enter
-non-bnode nodes, every step after the first hop stays inside one
-document.  The closure is then LABEL-LOCAL: a semi-join keeps the
-edges of the prefixes that have a seed, one hash-repartition by ``p``
-sorted by ``p`` within each partition, and one ``mapInArrow``
-depth-first walk that builds one document's adjacency at a time:
-linear in each document, cycle-safe, and with Python memory bounded
-by the largest document.  When the check fails (``_:b0``-style
-N-Quads labels, IRI-celled lists, cross-document blank nodes) the
-seeded closure falls back to PATH DOUBLING, as does every standalone
-closure: R ∪ R∘R per superstep, all-pairs reachability over the
-path's edge set in ceil(log2 diameter) supersteps, NOT
-one-hop-per-round, with per-round set-dedup as the
-map-side-combinable aggregate and a count-fixpoint stop, so cyclic
-graphs terminate (the rdf:list pointer-doubling walker would raise on
-a cycle; reachability is well-defined on one).  Like graph_paths, the
-whole evaluation materializes under ``capped_shuffle_width``: closure
-inputs (one predicate's edge set) are small relative to the triple
-table.
+Scale shape: a seeded closure (``A/B+/C``, ``A/B*/C`` and DESCRIBE's
+blank-node closure) first runs one cheap check over the closure's edge
+set: one aggregate, no join.  When every blank-node label is a
+per-document skolem label ``_:<p>.<n>``, every bnode→bnode edge keeps
+its prefix ``p``, and the edges never both leave and enter non-bnode
+nodes, every step after the first hop stays inside one document.  The
+closure is then LABEL-LOCAL: one hash-repartition by ``p`` of the
+starts and the edges, sorted by ``p`` within each partition, and one
+``mapInArrow`` depth-first walk that builds one document's adjacency
+at a time: linear in each document, cycle-safe, and with Python memory
+bounded by the largest document.  The walk returns
+zero-or-more reach, so a ``star`` inside a sequence seeds it with the
+prefix's pairs directly; a ``plus`` seeds it with their first hop.
+When the check fails (``_:b0``-style N-Quads labels, IRI-celled lists,
+cross-document blank nodes) the seeded closure falls back to PATH
+DOUBLING, as does every standalone closure: R ∪ R∘R per superstep,
+all-pairs reachability over the path's edge set in ceil(log2
+diameter) supersteps, NOT one-hop-per-round, with per-round set-dedup
+as the map-side-combinable aggregate and a count-fixpoint stop, so
+cyclic graphs terminate (the rdf:list pointer-doubling walker would
+raise on a cycle; reachability is well-defined on one).  Like
+graph_paths, the whole evaluation materializes under
+``capped_shuffle_width``: closure inputs (one predicate's edge set)
+are small relative to the triple table.
 
 The DuckDB oracle mirror (:func:`path_oracle_sql`) compiles the same
 AST to plain SQL, with ``WITH RECURSIVE`` (UNION = set semantics)
@@ -61,7 +65,7 @@ doubling loop.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -102,10 +106,8 @@ def _dedup(df: DataFrame) -> DataFrame:
 
 
 def _nodes(triples: DataFrame) -> DataFrame:
-    return (
-        triples.select(F.col("subj").alias("n"))
-        .unionByName(triples.select(F.col("obj").alias("n")))
-        .dropDuplicates(["n"])
+    return triples.select(F.col("subj").alias("n")).unionByName(
+        triples.select(F.col("obj").alias("n"))
     )
 
 
@@ -162,9 +164,14 @@ def _label_prefix(col: str):
     return F.regexp_extract(F.col(col), _LABEL_RE, 1)
 
 
-def _label_local(e: DataFrame) -> bool:
-    """True when a closure over ``e`` never leaves one label prefix
-    after its first hop, checked in one aggregate over ``e``:
+class _Locality(NamedTuple):
+    local: bool  # the closure over e never leaves a label prefix
+    iri_subjects: bool  # some edge of e has a non-bnode subject
+
+
+def _label_local(e: DataFrame) -> _Locality:
+    """What one aggregate over ``e`` tells a closure.  ``local`` is True
+    when the closure never leaves one label prefix after its first hop:
 
     (a) every blank-node endpoint has a label ``_:<p>.<digits>``;
     (b) every bnode→bnode edge has the same ``p`` at both ends;
@@ -173,7 +180,9 @@ def _label_local(e: DataFrame) -> bool:
     Blank nodes are told apart by the ``_:`` string prefix, because
     the closure joins on strings.  Under (c) a non-bnode node reached
     by the walk has no out-edge (or cannot be reached at all), so it
-    ends its path; under (b) every other step stays inside ``p``."""
+    ends its path; under (b) every other step stays inside ``p``.
+    ``iri_subjects`` says whether a zero-length start on a non-bnode
+    node can take a hop at all."""
     bs, bo = F.col("s").startswith("_:"), F.col("o").startswith("_:")
     ps, po = _label_prefix("s"), _label_prefix("o")
     row = e.agg(
@@ -182,7 +191,10 @@ def _label_local(e: DataFrame) -> bool:
         F.bool_or(~bs).alias("other_subj"),
         F.bool_or(~bo).alias("other_obj"),
     ).first()
-    return not (row.unlabelled or row.cross or (row.other_subj and row.other_obj))
+    return _Locality(
+        local=not (row.unlabelled or row.cross or (row.other_subj and row.other_obj)),
+        iri_subjects=bool(row.other_subj),
+    )
 
 
 _WALK_BATCH = 8192
@@ -192,30 +204,39 @@ def _walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow body of the label-local closure.  A partition holds
     whole label prefixes ``_k``, sorted by ``(_k, _seed)``: first a
     prefix's edges ``(s, o)`` (subject in the prefix), then its seeds
-    ``(x, y)`` (object in the prefix).  Builds one prefix's adjacency
-    at a time, so Python memory is bounded by the largest document,
-    and emits ``(x, z)`` for every ``z`` reachable from ``y`` by zero
-    or more edges (a depth-first walk with a visited set per seed, so
-    cycles terminate)."""
-    key, adj = None, {}
+    ``(x, y)`` (object in the prefix), sorted by ``x``.  Builds one
+    prefix's adjacency at a time, so Python memory is bounded by the
+    largest document, and emits ``(x, z)`` for every ``z`` reachable
+    from ``y`` by zero or more edges: a depth-first walk, cycle-safe,
+    whose visited set is shared by all of one ``x``'s seeds in the
+    prefix.  So each ``(x, z)`` of a prefix is emitted once, however
+    many of ``x``'s seeds reach ``z``, and a duplicate seed walks
+    nothing."""
+    key, adj, src, seen = None, {}, None, set()
     out_s: list[str] = []
     out_o: list[str] = []
     for b in batches:
         cols = b.to_pydict()
         for k, s, o, is_seed in zip(cols["_k"], cols["s"], cols["o"], cols["_seed"]):
             if k != key:
-                key, adj = k, {}
+                key, adj, src = k, {}, None
             if not is_seed:
                 adj.setdefault(s, []).append(o)
                 continue
-            seen, stack = {o}, [o]
+            if s != src:
+                src, seen = s, set()
+            if o in seen:
+                continue
+            seen.add(o)
+            new, stack = [o], [o]
             while stack:
                 for z in adj.get(stack.pop(), ()):
                     if z not in seen:
                         seen.add(z)
+                        new.append(z)
                         stack.append(z)
-            out_s.extend([s] * len(seen))
-            out_o.extend(seen)
+            out_s.extend([s] * len(new))
+            out_o.extend(new)
             if len(out_s) >= _WALK_BATCH:
                 yield pa.RecordBatch.from_pydict({"s": out_s, "o": out_o})
                 out_s, out_o = [], []
@@ -229,70 +250,102 @@ def _compose(left: DataFrame, right: DataFrame) -> DataFrame:
     # common LogicalRDD ancestor can fail attribute resolution at
     # checkpoint time (Catalyst 'key not found: s#N')
     rr = right.select(F.col("s").alias("_js"), F.col("o").alias("_jo"))
-    return _dedup(
-        left.join(rr, F.col("o") == F.col("_js"), "inner")
-        .select("s", F.col("_jo").alias("o"))
+    return left.join(rr, F.col("o") == F.col("_js"), "inner").select(
+        "s", F.col("_jo").alias("o")
     )
 
 
-def _local_closure(acc: DataFrame, e: DataFrame) -> DataFrame:
-    """acc ∘ e+ for a label-local ``e`` (:func:`_label_local`): the
-    first hop ``r0 = acc∘e`` as in the doubling loop, then one
-    hash-repartition by label prefix of the bnode-object seeds and of
-    the bnode-subject edges whose prefix has a seed, and one
-    :func:`_walk` per partition.  Seeds whose object is not a blank
-    node end their path under (c); they skip the walk, so they cannot
-    pile into one partition.  The final dedup is needed because one
-    node (``rdf:nil``) can be reached from many prefixes."""
-    r0 = _compose(acc, e)
-    is_bnode = F.col("o").startswith("_:")
-    seeds = r0.filter(is_bnode).select(
-        "s", "o", _label_prefix("o").alias("_k"), F.lit(True).alias("_seed")
+def _iri_first_hop(acc: DataFrame, e: DataFrame) -> DataFrame:
+    """Every pair of ``acc`` plus one hop of ``e`` from its non-bnode
+    objects: ``acc ∪ acc∘e_iri``, where ``e_iri`` are the edges with a
+    non-bnode subject.  One left join feeds both halves, so ``acc`` is
+    evaluated once (a union would evaluate it twice)."""
+    hop = e.filter(~F.col("s").startswith("_:")).select(
+        F.col("s").alias("_js"), F.col("o").alias("_jo")
     )
-    edges = (
-        e.filter(F.col("s").startswith("_:"))
-        .select("s", "o", _label_prefix("s").alias("_k"), F.lit(False).alias("_seed"))
-        .join(seeds.select("_k").distinct(), "_k", "left_semi")
+    return acc.join(hop, F.col("o") == F.col("_js"), "left").select(
+        "s", F.explode(F.array_compact(F.array("o", "_jo"))).alias("o")
     )
-    walked = (
+
+
+def _local_closure(starts: DataFrame, e: DataFrame) -> DataFrame:
+    """starts ∘ e* for a label-local ``e`` (:func:`_label_local`) whose
+    non-bnode nodes take no further hop from ``starts``: one
+    hash-repartition of the starts and of the bnode-subject edges by
+    label prefix, and one :func:`_walk` per partition, which returns
+    every start's zero-or-more reach.  ``starts`` is consumed once.  A
+    start whose object is not a labelled blank node has nothing to
+    walk; ``_walk`` passes it through as its own zero-length pair, and
+    it is keyed by the pair, so such starts spread over the partitions
+    instead of piling into one.  Every bnode-subject edge is shipped,
+    also those of prefixes that no start reaches: a semi-join would
+    consume ``starts`` a second time.  Duplicate starts walk once
+    (:func:`_walk`), but the result may still hold duplicates (one
+    node, e.g. ``rdf:nil``, is reached from many prefixes); the caller
+    deduplicates once, at its output."""
+    prefix = _label_prefix("o")
+    seeds = starts.select(
+        "s", "o",
+        F.when(prefix != "", prefix).otherwise(F.concat_ws(" ", "s", "o")).alias("_k"),
+        F.lit(True).alias("_seed"),
+    )
+    edges = e.filter(F.col("s").startswith("_:")).select(
+        "s", "o", _label_prefix("s").alias("_k"), F.lit(False).alias("_seed")
+    )
+    return (
         seeds.unionByName(edges)
         .repartition("_k")
-        .sortWithinPartitions("_k", "_seed")
+        .sortWithinPartitions("_k", "_seed", "s")
         .mapInArrow(_walk, "s string, o string")
     )
-    return _dedup(r0.filter(~is_bnode).unionByName(walked))
 
 
-def _seeded_closure(acc: DataFrame, e: DataFrame, max_iters: int) -> DataFrame:
-    """acc ∘ e+ WITHOUT the all-pairs closure, seeded from acc's object
-    side.  When ``e`` is label-local (:func:`_label_local`, one
-    aggregate job) the closure is :func:`_local_closure`: a semi-join,
-    one shuffle and one Arrow walk, linear in each document.
+def _seeded_closure(
+    acc: DataFrame, e: DataFrame, max_iters: int, star: bool = False
+) -> DataFrame:
+    """acc ∘ e+ (or acc ∘ e* with ``star``) WITHOUT the all-pairs
+    closure, seeded from acc's object side.  When ``e`` is label-local
+    (:func:`_label_local`, one aggregate job) the closure is
+    :func:`_local_closure`: one shuffle and one Arrow walk, linear in
+    each document.  Its starts are ``acc∘e`` for ``plus``; for ``star``
+    they are ``acc`` itself, because the walk already returns
+    zero-or-more reach, and acc's non-bnode objects take one hop first
+    (:func:`_iri_first_hop`) only when ``e`` has edges with non-bnode
+    subjects.
 
     Otherwise it falls back to frontier doubling: R_0 = acc∘e (one
     step); each round R ← R ∪ R∘J and J ← J∘J (J starts as e, step size
     doubles), so after k rounds R covers path lengths 1..2^k from the
     SEEDS, in O(log depth) rounds of two eager localCheckpoints and a
-    count.  R stays restricted to the seeds' reach, but J∘J squares
-    EVERY edge of ``e`` each round, so the work grows with the whole
-    edge set's 2^k-step pairs, not with the answer: DESCRIBE of three
-    conversations doubles the jump table over every blank-node edge in
-    the graph.  ``max_iters`` bounds only this loop."""
-    if _label_local(e):
-        return _local_closure(acc, e)
+    count; ``star`` adds acc's zero-length pairs.  R stays restricted
+    to the seeds' reach, but J∘J squares EVERY edge of ``e`` each
+    round, so the work grows with the whole edge set's 2^k-step pairs,
+    not with the answer: DESCRIBE of three conversations doubles the
+    jump table over every blank-node edge in the graph.  Each round
+    deduplicates, because the count fixpoint needs set semantics.
+    ``max_iters`` bounds only this loop."""
+    check = _label_local(e)
+    if check.local:
+        if not star:
+            starts = _compose(acc, e)
+        elif check.iri_subjects:
+            starts = _iri_first_hop(acc, e)
+        else:
+            starts = acc
+        return _local_closure(starts, e)
     jump = _dedup(e).localCheckpoint(eager=True)
-    r = _compose(acc, jump).localCheckpoint(eager=True)
+    r = _dedup(_compose(acc, jump)).localCheckpoint(eager=True)
     n = r.count()
     for _ in range(max_iters):
         r2 = _dedup(r.unionByName(_compose(r, jump))).localCheckpoint(eager=True)
         n2 = r2.count()
         if n2 == n:
-            return r2
+            return acc.unionByName(r2) if star else r2
         r, n = r2, n2
         # jump stays the EXACTLY-2^k-step table (pure composition, no
         # union): R already holds all shorter lengths, so R∘J_k extends
         # the frontier to 2^{k+1} — J itself never becomes a closure
-        jump = _compose(jump, jump).localCheckpoint(eager=True)
+        jump = _dedup(_compose(jump, jump)).localCheckpoint(eager=True)
     raise RuntimeError(
         f"seeded path closure did not converge in {max_iters} doubling rounds"
     )
@@ -301,63 +354,48 @@ def _seeded_closure(acc: DataFrame, e: DataFrame, max_iters: int) -> DataFrame:
 def _eval(
     triples: DataFrame, path, max_iters: int, allow_full_closure: bool = False
 ) -> DataFrame:
+    """The (s, o) relation of ``path``, possibly with duplicate pairs:
+    :func:`eval_path` deduplicates once, at its output."""
+    def sub(p):
+        return _eval(triples, p, max_iters, allow_full_closure)
+
     if isinstance(path, str):
-        return _dedup(
-            triples.filter(F.col("pred") == _iri(path)).select(
-                F.col("subj").alias("s"), F.col("obj").alias("o")
-            )
+        return triples.filter(F.col("pred") == _iri(path)).select(
+            F.col("subj").alias("s"), F.col("obj").alias("o")
         )
     kind = path[0]
     if kind == "neg":
         # SPARQL negated property set !(p1|...): any edge whose
         # predicate is NOT one of the listed IRIs (forward direction)
-        return _dedup(
-            triples.filter(~F.col("pred").isin([_iri(p) for p in path[1:]]))
-            .select(F.col("subj").alias("s"), F.col("obj").alias("o"))
+        return triples.filter(~F.col("pred").isin([_iri(p) for p in path[1:]])).select(
+            F.col("subj").alias("s"), F.col("obj").alias("o")
         )
     if kind == "inv":
-        inner = _eval(triples, path[1], max_iters, allow_full_closure)
-        return inner.select(F.col("o").alias("s"), F.col("s").alias("o"))
+        return sub(path[1]).select(F.col("o").alias("s"), F.col("s").alias("o"))
     if kind == "seq":
-        acc = _eval(triples, path[1], max_iters, allow_full_closure)
-        for sub in path[2:]:
-            if isinstance(sub, tuple) and sub[0] == "plus":
+        acc = sub(path[1])
+        for p in path[2:]:
+            if isinstance(p, tuple) and p[0] in ("plus", "star"):
                 # seed the closure from acc's frontier instead of
                 # composing with the all-pairs closure (see
                 # _seeded_closure — linear in the answer, not in the
                 # graph's transitive closure)
-                acc = _seeded_closure(
-                    acc, _eval(triples, sub[1], max_iters, allow_full_closure),
-                    max_iters,
-                )
-                continue
-            nxt = _eval(triples, sub, max_iters, allow_full_closure)
-            acc = _dedup(
-                acc.alias("a")
-                .join(nxt.alias("b"), F.col("a.o") == F.col("b.s"), "inner")
-                .select(F.col("a.s").alias("s"), F.col("b.o").alias("o"))
-            )
+                acc = _seeded_closure(acc, sub(p[1]), max_iters, star=p[0] == "star")
+            else:
+                acc = _compose(acc, sub(p))
         return acc
     if kind == "alt":
-        acc = _eval(triples, path[1], max_iters, allow_full_closure)
-        for sub in path[2:]:
-            acc = acc.unionByName(_eval(triples, sub, max_iters, allow_full_closure))
-        return _dedup(acc)
+        acc = sub(path[1])
+        for p in path[2:]:
+            acc = acc.unionByName(sub(p))
+        return acc
     if kind == "plus":
-        return _closure(
-            _eval(triples, path[1], max_iters, allow_full_closure),
-            max_iters, allow_full_closure,
-        )
+        return _closure(sub(path[1]), max_iters, allow_full_closure)
     ident = _nodes(triples).select(F.col("n").alias("s"), F.col("n").alias("o"))
     if kind == "star":
-        return _dedup(
-            _closure(
-                _eval(triples, path[1], max_iters, allow_full_closure),
-                max_iters, allow_full_closure,
-            ).unionByName(ident)
-        )
+        return _closure(sub(path[1]), max_iters, allow_full_closure).unionByName(ident)
     if kind == "opt":
-        return _dedup(_eval(triples, path[1], max_iters, allow_full_closure).unionByName(ident))
+        return sub(path[1]).unionByName(ident)
     raise ValueError(f"bad path node {path!r}")  # pragma: no cover — _check
 
 
@@ -382,10 +420,13 @@ def _invert(path):
 
 
 def _rewrite(path):
-    """Algebraic optimizer: eliminate zero-length identities INSIDE
-    sequences —
+    """Algebraic optimizer: keep the zero-length identity over all graph
+    nodes out of sequences.  A ``star`` after the head of a sequence
+    stays: ``_eval`` seeds it from the prefix (:func:`_seeded_closure`),
+    so ``A/B*/C`` is linear in the answer and never materializes the
+    identity.  A head ``star`` and every ``opt`` are eliminated —
 
-        A / B* / C  =  A/C  ∪  A/B+/C
+        B* / C     =  C  ∪  B+/C
         A / B? / C  =  A/C  ∪  A/B/C
 
     (set semantics makes the identity exact).  A standalone ``star`` /
@@ -393,14 +434,9 @@ def _rewrite(path):
     but inside a sequence that relation is immediately composed away —
     at 10^12 triples, materializing identity pairs for EVERY graph
     node just to join them off again is a scale-killer (at sf0.1 the
-    identity relation alone is ~2M rows per star).  The rewrite also
-    exposes ``plus`` to the SEEDED closure (_seeded_closure), making
-    ``A/B*/C`` linear in the answer instead of in B's transitive
-    closure — the asymptotic difference shows with long chains; the
-    sf0.1 fixtures' short lists are fixpoint-round-bound either way.
-    Each expansion removes one star/opt from a seq, so the rewrite
-    terminates with at most 2^k alternatives for k stars — SPARQL
-    paths in the wild have k ≤ 2."""
+    identity relation alone is ~2M rows per star).  Each expansion
+    removes one star/opt from a seq, so the rewrite terminates with at
+    most 2^k alternatives for k of them."""
     if isinstance(path, str):
         return path
     kind = path[0]
@@ -409,7 +445,7 @@ def _rewrite(path):
     parts = [_rewrite(p) for p in path[1:]]
     if kind == "seq":
         for i, p in enumerate(parts):
-            if isinstance(p, tuple) and p[0] in ("star", "opt"):
+            if isinstance(p, tuple) and (p[0] == "opt" or (p[0] == "star" and i == 0)):
                 rest = parts[:i] + parts[i + 1:]
                 stepped = (
                     parts[:i]
@@ -421,14 +457,14 @@ def _rewrite(path):
                 return ("alt", _rewrite(skip_ast), _rewrite(plus_ast))
         if (
             isinstance(parts[0], tuple) and parts[0][0] == "plus"
-            and not (isinstance(parts[-1], tuple) and parts[-1][0] == "plus")
+            and not (isinstance(parts[-1], tuple) and parts[-1][0] in ("plus", "star"))
         ):
             # HEAD-position plus (e.g. the B+/C arm of a rewritten
             # B*/C): _eval's seq handler only SEEDS non-head closures,
             # so a head plus would fall through to the all-pairs
             # closure (round-5 advice).  seq(p1..pn) = inv(seq(inv(pn)
             # .. inv(p1))) moves the plus to a seedable tail position;
-            # guarded so a tail plus never migrates to the head.
+            # guarded so a tail closure never migrates to the head.
             return ("inv", tuple(["seq", *[_invert(p) for p in reversed(parts)]]))
     return tuple([kind, *parts])
 
@@ -449,8 +485,8 @@ def eval_path(
         # closures are eager (fixpoint counts), so the capped conf is
         # active for every superstep; the final relation materializes
         # here too so the caller's plan just scans it
-        return _eval(
-            triples, path, max_iters, allow_full_closure
+        return _dedup(
+            _eval(triples, path, max_iters, allow_full_closure)
         ).localCheckpoint(eager=True)
 
 

@@ -179,11 +179,12 @@ COMMENT = {
         "shuffles, whole-stage-codegen'd."
     ),
     "kg_describe_convs": (
-        "DESCRIBE/CBD (round 5): the bnode closure is materialized by "
-        "the seeded pointer-doubling loop BEFORE this plan (scan of a "
-        "checkpointed reach table); what remains is one equi-join of "
-        "reach against the triple table + set-dedup. O(log list-depth) "
-        "supersteps, work bounded by the described nodes' closures."
+        "DESCRIBE/CBD (round 5): the reach roots ∘ bnode_edges* is "
+        "materialized BEFORE this plan (scan of a checkpointed reach "
+        "table) by the label-local star closure — one left join for the "
+        "roots' first hop, one shuffle by document and one Arrow walk, "
+        "with pointer doubling as the fallback; what remains is one "
+        "equi-join of reach against the triple table + set-dedup."
     ),
     "kg_bgp_expr_turn_keys": (
         "Expression library + multi-var VALUES (round 6): STRBEFORE/"

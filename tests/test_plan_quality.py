@@ -343,3 +343,47 @@ def test_sparql_text_query_plans_stay_jvm_side(spark):  # noqa: F811
         assert "BatchEvalPython" not in plan, fn.__name__
         assert "CartesianProduct" not in plan, fn.__name__
         assert "TakeOrderedAndProject" in plan, fn.__name__
+
+
+def _checkpoint_plans(spark, monkeypatch) -> list[str]:
+    """Collects the physical plan of every DataFrame that is
+    localCheckpointed while the test runs: a closure's materialized
+    plan, before AQE re-plans it."""
+    cls = type(spark.range(1))
+    materialize = cls.localCheckpoint
+    plans: list[str] = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(_plan(self))
+        return materialize(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return plans
+
+
+def test_label_local_closure_plans_are_lean(spark, monkeypatch):  # noqa: F811
+    """Over the persisted sf0.001 table: the list walk's star seeds the
+    Arrow walk directly and deduplicates once, at the output (at most 3
+    shuffles, 5 parquet scans); DESCRIBE's reach evaluates the roots'
+    BGP once, feeding the walk and the zero-length pairs from one scan."""
+    import re
+
+    from jsonld_ex_spark.operators.bgp import bgp_describe
+    from jsonld_ex_spark.operators.graph_paths import RDF_NS
+    from jsonld_ex_spark.operators.property_paths import eval_path
+    from jsonld_ex_spark.sources.transcripts import VOCAB
+
+    t = spark.read.parquet(kg_queries._persisted_triples_dir(spark, SF))
+    plans = _checkpoint_plans(spark, monkeypatch)
+    eval_path(t, ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF_NS}rest>"), f"<{RDF_NS}first>"))
+    (walk,) = plans
+    assert walk.count("Exchange hashpartitioning") <= 3, walk
+    assert walk.count("Scan parquet") <= 5, walk
+
+    plans.clear()
+    roots = t.filter((F.col("pred") == f"{VOCAB}turns") & F.col("subj").rlike("00$")).select("subj")
+    bgp_describe(t, roots)
+    (reach,) = plans
+    # the roots' scan is the only one that reads ``pred``
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", reach)
+    assert sum("pred#" in cols for cols in scans) == 1, reach

@@ -165,11 +165,15 @@ def test_negated_property_set(tiny):
 def test_seq_star_rewrite_equivalence(tiny):
     """The seq-star/opt identity-elimination rewrite must be invisible:
     Spark (rewritten) vs DuckDB (direct form) on multi-star sequences,
-    and the rewriter's output shape is as derived."""
+    and the rewriter's output shape is as derived: a star after the
+    head of a sequence stays (the seeded walk is zero-or-more), a head
+    star and every opt are eliminated."""
     from jsonld_ex_spark.operators.property_paths import _rewrite
 
-    assert _rewrite(("seq", "q", ("star", "p"))) == (
-        "alt", "q", ("seq", "q", ("plus", "p")))
+    assert _rewrite(("seq", "q", ("star", "p"))) == ("seq", "q", ("star", "p"))
+    assert _rewrite(("seq", "a", ("star", "b"), "c")) == ("seq", "a", ("star", "b"), "c")
+    assert _rewrite(("seq", ("star", "p"), "q")) == (
+        "alt", "q", ("inv", ("seq", ("inv", "q"), ("plus", ("inv", "p")))))
     assert _rewrite(("seq", "a", ("opt", "b"), "c")) == (
         "alt", ("seq", "a", "c"), ("seq", "a", "b", "c"))
     for path in [
@@ -277,6 +281,13 @@ LIST_PATHS = [
     ("seq", f"{V}turns", ("star", f"{V}rest"), f"{V}first"),
     ("seq", f"{V}turns", ("plus", f"{V}rest")),
 ]
+# the same paths in the form a star took before it seeded the walk
+# itself: A/B*/C = A/C ∪ A/B+/C
+ALT_PATHS = [
+    ("alt", ("seq", f"{V}turns", f"{V}first"),
+     ("seq", f"{V}turns", ("plus", f"{V}rest"), f"{V}first")),
+    LIST_PATHS[1],
+]
 _SCHEMA = "subj string, pred string, obj string, obj_is_iri boolean"
 
 
@@ -296,11 +307,28 @@ def _bn(doc: str, n: int) -> list[str]:
     return [f"_:{doc}.{i}" for i in range(n)]
 
 
+def _iri_head_conv(doc: str, n: int, extra=()) -> list[tuple]:
+    """Conversation ``urn:c:<doc>`` whose list starts at the IRI cell
+    ``urn:cell:<doc>`` and goes on through ``n`` blank cells; the last
+    cell has no rest edge.  No rest edge has an IRI object, so the rest
+    edges stay label-local while some have an IRI subject: the star
+    walk's first-hop case."""
+    head, cells = f"urn:cell:{doc}", _bn(doc, n)
+    rows = [(f"urn:c:{doc}", f"{V}turns", head, True),
+            (head, f"{V}first", f"urn:t:{doc}.h", True)]
+    for i, (a, b) in enumerate(zip([head] + cells, cells)):
+        rows.append((a, f"{V}rest", b, True))
+        rows.append((b, f"{V}first", f"urn:t:{doc}.{i}", True))
+    rows += [(cells[i], f"{V}rest", cells[j], True) for i, j in extra]
+    return rows
+
+
 def _closure_runs(spark, rows, monkeypatch):
     """Evaluate every LIST_PATHS path and a DESCRIBE of every
-    conversation twice: as shipped (recording what the label-local
-    check decided) and with the check forced off (the doubling loop).
-    Returns (decisions, shipped results, doubling results)."""
+    conversation as shipped, recording what the label-local check
+    decided, and the same closures with the check forced off: the
+    ALT_PATHS forms through the doubling loop.  Returns (decisions,
+    shipped results, doubling results)."""
     from jsonld_ex_spark.operators import property_paths
     from jsonld_ex_spark.operators.bgp import bgp_describe
 
@@ -313,9 +341,11 @@ def _closure_runs(spark, rows, monkeypatch):
         decisions.append(check(e))
         return decisions[-1]
 
-    def run():
-        out = [set(_pairs(eval_path(df, p))) for p in LIST_PATHS]
-        out.append(set(tuple(r) for r in bgp_describe(df, roots).collect()))
+    # the test graphs converge in a few doubling rounds; a small bound
+    # makes a loop that stops converging fail fast instead of growing
+    def run(paths):
+        out = [set(_pairs(eval_path(df, p, max_iters=8))) for p in paths]
+        out.append(set(tuple(r) for r in bgp_describe(df, roots, max_iters=8).collect()))
         return out
 
     # keep every shuffle partition: coalesced into one, a walk would
@@ -326,10 +356,13 @@ def _closure_runs(spark, rows, monkeypatch):
     try:
         with monkeypatch.context() as m:
             m.setattr(property_paths, "_label_local", spy)
-            shipped = run()
+            shipped = run(LIST_PATHS)
         with monkeypatch.context() as m:
-            m.setattr(property_paths, "_label_local", lambda e: False)
-            doubling = run()
+            m.setattr(
+                property_paths, "_label_local",
+                lambda e: property_paths._Locality(False, False),
+            )
+            doubling = run(ALT_PATHS)
     finally:
         spark.conf.set(key, prev)
     return decisions, shipped, doubling
@@ -346,17 +379,45 @@ LOCAL_GRAPH = (
 )
 
 
+# IRI head cells with a cycle back to the first blank cell, an empty
+# tail and a one-cell tail
+IRI_HEAD_GRAPH = (
+    _iri_head_conv("g", 3, extra=[(2, 0)])
+    + _iri_head_conv("h", 0)
+    + _iri_head_conv("i", 1)
+)
+
+
 def test_label_local_closure_matches_doubling(spark, monkeypatch):  # noqa: F811
     """Every closure over a label-local graph takes the local path and
     returns exactly the doubling loop's (s, o) sets, for the list
-    paths and for DESCRIBE; the list paths also match DuckDB."""
+    paths (A/B*/C against its old A/C ∪ A/B+/C form) and for DESCRIBE;
+    the list paths also match DuckDB."""
     decisions, shipped, doubling = _closure_runs(spark, LOCAL_GRAPH, monkeypatch)
-    assert decisions == [True, True, True]  # two list paths, DESCRIBE
+    # two list paths, DESCRIBE; only DESCRIBE's edges have IRI subjects
+    assert [(d.local, d.iri_subjects) for d in decisions] == [
+        (True, False), (True, False), (True, True)]
     assert shipped == doubling
     assert ("urn:c:c", "_:c.0") in shipped[1]  # the cycle reaches its head
     assert ("urn:c:f", "urn:cell:f") in shipped[1]  # IRI-object terminal
+    assert ("urn:c:d", "urn:t:d.2") in shipped[0]  # through the branch
     for path, got in zip(LIST_PATHS, shipped):
         assert sorted(got) == _duck(path_oracle_sql(_cte(LOCAL_GRAPH), "?s", path, "?o"))
+
+
+def test_star_first_hop_from_iri_starts(spark, monkeypatch):  # noqa: F811
+    """A/B*/C where A reaches IRI cells that B leaves by IRI-subject
+    edges: the star keeps the IRI cell as its own zero-length pair and
+    takes the first hop from it before the walk."""
+    decisions, shipped, doubling = _closure_runs(spark, IRI_HEAD_GRAPH, monkeypatch)
+    assert [(d.local, d.iri_subjects) for d in decisions] == [(True, True)] * 3
+    assert shipped == doubling
+    star = shipped[0]
+    assert ("urn:c:g", "urn:t:g.h") in star  # zero-length pair of the IRI cell
+    assert ("urn:c:h", "urn:t:h.h") in star  # ... with no tail at all
+    assert {("urn:c:g", f"urn:t:g.{i}") for i in range(3)} <= star  # first hop + cycle
+    for path, got in zip(LIST_PATHS, shipped):
+        assert sorted(got) == _duck(path_oracle_sql(_cte(IRI_HEAD_GRAPH), "?s", path, "?o"))
 
 
 FALLBACK_GRAPHS = {
@@ -368,6 +429,7 @@ FALLBACK_GRAPHS = {
     + [("_:a.1", f"{V}rest", "_:g.0", True)],
     # N-Quads style labels carry no document prefix
     "unprefixed": _conv("a", ["_:b0", "_:b1", "_:b2"]),
+    "unprefixed_cycle": _conv("a", ["_:b0", "_:b1", "_:b2"], extra=[(2, 0)]),
     # IRI cells: the rest edges have IRI subjects AND IRI objects
     "iri_cells": _conv("a", ["urn:cell:0", "urn:cell:1"]) + _conv("b", _bn("b", 2)),
 }
@@ -382,10 +444,9 @@ def test_non_local_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # no
     decisions, shipped, doubling = _closure_runs(
         spark, FALLBACK_GRAPHS[name], monkeypatch
     )
-    list_decisions = decisions[:2]
-    assert list_decisions == [False, False]
+    assert [d.local for d in decisions[:2]] == [False, False]
     if name != "iri_cells":  # DESCRIBE never follows IRI cells
-        assert decisions[2] is False
+        assert decisions[2].local is False
     assert shipped == doubling
     if name == "cross_prefix":
         assert ("urn:c:a", "_:l.0") in shipped[1]
@@ -396,6 +457,7 @@ def _graph(draw):
     """A few conversations with random list lengths and random extra
     intra-document rest edges; optionally one perturbation that must
     force the fallback."""
+    kind = draw(st.sampled_from(["local", "local", "iri_head", "cross", "unprefixed"]))
     rows = []
     for d in range(draw(st.integers(1, 4))):
         n = draw(st.integers(0, 5))
@@ -403,33 +465,119 @@ def _graph(draw):
             draw(st.lists(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)), max_size=3))
             if n else []
         )
-        rows += _conv(f"d{d}", _bn(f"d{d}", n), extra)
+        if kind == "iri_head":
+            rows += _iri_head_conv(f"d{d}", n, extra)
+        else:
+            rows += _conv(f"d{d}", _bn(f"d{d}", n), extra)
     cells = [s for s, p, _, _ in rows if p == f"{V}first"]
-    kind = draw(st.sampled_from(["local", "local", "cross", "unprefixed"]))
     if kind == "cross" and cells:
         rows.append((draw(st.sampled_from(cells)), f"{V}rest", "_:zz.0", True))
         rows.append(("_:zz.0", f"{V}first", "urn:t:zz", True))
     elif kind == "unprefixed" and cells:
         rows.append((draw(st.sampled_from(cells)), f"{V}rest", "_:b0", True))
-    else:
+    elif kind != "iri_head":
         kind = "local"
     return kind, sorted(set(rows))
 
 
 @given(_graph())
 @settings(
-    max_examples=8,
+    max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_property_label_local_matches_doubling(spark, monkeypatch, case):  # noqa: F811
     """Random label-local graphs (cycles, branches, empty and one-cell
-    lists) and random perturbed ones: the shipped closure equals the
-    doubling loop, and the check decides as the construction says."""
+    lists, IRI head cells) and random perturbed ones: the shipped
+    closure (A/B*/C seeding the walk) equals the old A/C ∪ A/B+/C form
+    through the doubling loop, and the check decides as the
+    construction says."""
     kind, rows = case
     decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
-    assert decisions[:2] == [kind == "local"] * 2
+    assert [d.local for d in decisions[:2]] == [kind in ("local", "iri_head")] * 2
     assert shipped == doubling
+
+
+DUP_PATHS = [
+    ("seq", f"{V}turns", f"{V}first"),
+    ("alt", f"{V}rest", ("inv", ("inv", f"{V}rest"))),  # both branches equal
+    ("inv", f"{V}rest"),
+    ("plus", f"{V}rest"),
+    *LIST_PATHS,
+]
+
+
+@pytest.mark.parametrize("graph", ["label_local", "unprefixed"])
+def test_duplicate_triples_keep_set_semantics(spark, graph):  # noqa: F811
+    """Set semantics hold at the output even though the leaves, joins
+    and unions inside a path no longer deduplicate: over a table that
+    holds every triple three times, each path and DESCRIBE equals the
+    result over the deduplicated table and the DuckDB oracle, on the
+    label-local walk and on the ``_:b0`` doubling fallback."""
+    from jsonld_ex_spark.operators.bgp import bgp_describe, bgp_describe_oracle_sql
+
+    rows = LOCAL_GRAPH if graph == "label_local" else FALLBACK_GRAPHS["unprefixed"]
+    tripled = spark.createDataFrame(rows * 3, _SCHEMA)
+    once = spark.createDataFrame(rows, _SCHEMA)
+    for path in DUP_PATHS:
+        got = _pairs(eval_path(tripled, path))
+        assert got == _pairs(eval_path(once, path)), path
+        assert got == _duck(path_oracle_sql(_cte(rows * 3), "?s", path, "?o")), path
+        assert got
+    roots = sorted({s for s, p, _, _ in rows if p == f"{V}turns"})
+    got = sorted(tuple(r) for r in bgp_describe(tripled, roots).collect())
+    assert got == sorted(tuple(r) for r in bgp_describe(once, roots).collect())
+    roots_sql = " UNION ALL ".join(f"SELECT '{r}' AS root" for r in roots)
+    assert got == _duck(bgp_describe_oracle_sql(_cte(rows * 3), roots_sql))
+
+
+# a hub root with three blank-node objects whose reaches overlap (and
+# a cycle), a second root sharing one of them, and a blank-node root
+HUB_GRAPH = [
+    ("urn:r", f"{V}has", "_:r.0", True),
+    ("urn:r", f"{V}has", "_:r.1", True),
+    ("urn:r", f"{V}has", "_:r.2", True),
+    ("urn:r", f"{V}name", "hub", False),
+    ("urn:s", f"{V}has", "_:r.0", True),
+    ("_:r.0", f"{V}next", "_:r.3", True),
+    ("_:r.1", f"{V}next", "_:r.3", True),
+    ("_:r.3", f"{V}next", "_:r.4", True),
+    ("_:r.4", f"{V}next", "_:r.3", True),
+    ("_:r.4", f"{V}name", "tail", False),
+    ("_:r.2", f"{V}name", "leaf", False),
+]
+
+
+def test_describe_walks_duplicate_roots_once(spark, monkeypatch):  # noqa: F811
+    """DESCRIBE given a roots DataFrame that binds each root several
+    times (the bag output of bgp_select): the reach holds every (root,
+    node) pair once, although the hub's blank-node objects reach the
+    same nodes and each root arrives several times, and DESCRIBE
+    equals DuckDB."""
+    from jsonld_ex_spark.operators import property_paths
+    from jsonld_ex_spark.operators.bgp import bgp_describe, bgp_describe_oracle_sql
+
+    df = spark.createDataFrame(HUB_GRAPH, _SCHEMA)
+    bag = ["urn:r"] * 4 + ["urn:s"] * 2 + ["_:r.1"] * 3
+    roots = spark.createDataFrame([(r,) for r in bag], "x string")
+    closure, reaches = property_paths._seeded_closure, []
+
+    def spy(*args, **kwargs):
+        reaches.append(closure(*args, **kwargs))
+        return reaches[-1]
+
+    monkeypatch.setattr(property_paths, "_seeded_closure", spy)
+    got = sorted(tuple(r) for r in bgp_describe(df, roots).collect())
+    reach = _pairs(reaches[0])
+    assert len(reach) == len(set(reach))
+    hub = {"urn:r"} | {f"_:r.{i}" for i in range(5)}
+    assert set(reach) == (
+        {("urn:r", n) for n in hub}
+        | {("urn:s", n) for n in ("urn:s", "_:r.0", "_:r.3", "_:r.4")}
+        | {("_:r.1", n) for n in ("_:r.1", "_:r.3", "_:r.4")}
+    )
+    roots_sql = " UNION ALL ".join(f"SELECT '{r}' AS root" for r in bag)
+    assert got == _duck(bgp_describe_oracle_sql(_cte(HUB_GRAPH), roots_sql))
 
 
 def test_capped_shuffle_width_restores_on_raise(spark):  # noqa: F811
