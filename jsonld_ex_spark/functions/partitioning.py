@@ -18,15 +18,34 @@ superstep join or aggregate re-shuffles at the session's full
 for the duration of an EAGER materialization sizes those shuffles to
 the superstep data; a plan returned lazily evaluates after the restore
 and is not capped.
+
+`session_memo` is the one driver-side memo for per-session shared
+tables (the gate family's checkpointed triples, walks and edge sets,
+the BGP predicate statistics): an entry lives as long as its
+SparkSession's application, because a localCheckpoint dies with the
+executors that hold it.  It is a small LRU, so a burst of short-lived
+entries cannot push out a table that queries keep scanning.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Callable, Hashable, Iterator, TypeVar
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
+
+# entries held across all memo users; the gate family needs about a
+# dozen per session, and a long-lived session's fresh snapshot reads
+# add predicate-statistics entries that the LRU ages out
+SESSION_MEMO_BOUND = 32
+
+_SESSION_MEMO: OrderedDict[tuple, object] = OrderedDict()
+_SESSION_MEMO_LOCK = threading.Lock()
 
 
 def spread_input(df: DataFrame, *keys: str) -> DataFrame:
@@ -54,3 +73,29 @@ def capped_shuffle_width(spark) -> Iterator[None]:
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+def session_memo(spark, key: tuple[Hashable, ...], build: Callable[[], T]) -> T:
+    """Return the value memoized for ``key`` in ``spark``'s application,
+    calling ``build()`` on a miss.  ``key`` names the memo user first
+    (``("triples", sf_dir)``).  Inserting drops every entry of another
+    application (a stopped session's checkpoints are gone) and the least
+    recently used entries beyond ``SESSION_MEMO_BOUND``.
+
+    The lock guards only the dict: ``build`` runs outside it, so a build
+    may itself call ``session_memo``, and two threads that miss the same
+    key both build; the first insert wins and both return it."""
+    full = (spark.sparkContext.applicationId, *key)
+    with _SESSION_MEMO_LOCK:
+        if full in _SESSION_MEMO:
+            _SESSION_MEMO.move_to_end(full)
+            return _SESSION_MEMO[full]
+    value = build()
+    with _SESSION_MEMO_LOCK:
+        for k in [k for k in _SESSION_MEMO if k[0] != full[0]]:
+            del _SESSION_MEMO[k]
+        value = _SESSION_MEMO.setdefault(full, value)
+        _SESSION_MEMO.move_to_end(full)
+        while len(_SESSION_MEMO) > SESSION_MEMO_BOUND:
+            _SESSION_MEMO.popitem(last=False)
+    return value

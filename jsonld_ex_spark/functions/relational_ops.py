@@ -13,16 +13,20 @@ quantization for cross-engine exactness).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
 def _sql(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataFrame:
+    """Run ``sql`` (the text DuckDB also runs) with each ``FROM``/``JOIN``
+    of a name in ``tables`` bound to that parquet table for this call
+    only, so no session temp view is created or re-pointed."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # timestamp literals
-    for t in tables:
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    return spark.sql(sql)
+    text = re.sub(rf"\b(FROM|JOIN)(\s+)({'|'.join(tables)})\b", r"\1\2{\3}", sql)
+    return spark.sql(text, **{t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in tables})
 
 
 _Q1 = """

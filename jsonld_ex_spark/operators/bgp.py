@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jsonld_ex_spark.functions.partitioning import capped_shuffle_width
+from jsonld_ex_spark.functions.partitioning import capped_shuffle_width, session_memo
 
 _VAR, _IRI, _LIT = "var", "iri", "lit"
 
@@ -108,8 +108,6 @@ def _n_constants(parsed: list[tuple[str, str]]) -> int:
 
 # --- statistics-driven join ordering (r7, round-6 verdict item 1) ----------
 
-_PRED_STATS_MEMO: dict[tuple[str, int], dict] = {}
-
 
 def predicate_stats(triples: DataFrame) -> dict:
     """Per-predicate cardinality statistics for cost-based join
@@ -126,35 +124,26 @@ def predicate_stats(triples: DataFrame) -> dict:
     ORDER of the compiled Spark plan — never the result set, and never
     the (fingerprinted) oracle SQL, which keeps the static
     constant-count order."""
-    spark = triples.sparkSession
+
+    def build() -> dict:
+        rows = triples.groupBy("pred").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("subj").alias("ndv_s"),
+            F.approx_count_distinct("obj").alias("ndv_o"),
+        ).collect()
+        return {
+            "total": int(sum(r["n"] for r in rows)),
+            "preds": {
+                r["pred"]: (int(r["n"]), max(int(r["ndv_s"]), 1), max(int(r["ndv_o"]), 1))
+                for r in rows
+            },
+        }
+
     try:
-        key = (spark.sparkContext.applicationId, triples.semanticHash())
+        plan_hash = triples.semanticHash()
     except Exception:  # pragma: no cover — hash unavailable on exotic plans
-        key = None
-    if key is not None and key in _PRED_STATS_MEMO:
-        return _PRED_STATS_MEMO[key]
-    rows = triples.groupBy("pred").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct("subj").alias("ndv_s"),
-        F.approx_count_distinct("obj").alias("ndv_o"),
-    ).collect()
-    stats = {
-        "total": int(sum(r["n"] for r in rows)),
-        "preds": {
-            r["pred"]: (int(r["n"]), max(int(r["ndv_s"]), 1), max(int(r["ndv_o"]), 1))
-            for r in rows
-        },
-    }
-    if key is not None:
-        for k in [k for k in _PRED_STATS_MEMO if k[0] != key[0]]:
-            del _PRED_STATS_MEMO[k]
-        # bound same-session growth too: a long-lived session issuing
-        # many updates over fresh snapshot reads gets a new semantic
-        # hash per table — evict oldest beyond a small working set
-        while len(_PRED_STATS_MEMO) >= 32:
-            del _PRED_STATS_MEMO[next(iter(_PRED_STATS_MEMO))]
-        _PRED_STATS_MEMO[key] = stats
-    return stats
+        return build()
+    return session_memo(triples.sparkSession, ("predicate_stats", plan_hash), build)
 
 
 def _estimated_rows(parsed: list[tuple[str, str]], stats: dict) -> float:

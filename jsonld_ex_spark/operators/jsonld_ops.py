@@ -7,7 +7,7 @@ pipeline in operators/kg_pipeline.py.
 Shape (the 100 TB rules all apply):
 * each operator is ONE fused Arrow-batched ``mapInPandas`` stage — no
   shuffle is introduced; partitioning of the input is preserved;
-* per-executor processed-context cache keyed by the context's JSON —
+* per-executor processed-context LRU keyed by the context's JSON —
   shared ``@context`` values (the common case: one vocabulary across
   billions of docs) are processed once per executor, not per document;
 * per-document quarantine: a document that raises a spec error yields
@@ -22,6 +22,7 @@ before distributing; executors never perform I/O.
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Iterator
 
@@ -38,16 +39,16 @@ from jsonld_ex_spark.core.to_rdf import to_rdf_from_node_map
 
 QUARANTINE_PRED = "https://sparkld.dev/system#processingError"
 
-_CTX_CACHE: dict[str, Context] = {}
+# entries per reused Python worker in each executor-side cache; bounds
+# a corpus in which every document carries its own inline context
+EXECUTOR_CACHE_SIZE = 256
 
 
+@functools.lru_cache(maxsize=EXECUTOR_CACHE_SIZE)
 def _processed_context(ctx_json: str) -> Context:
-    """Per-executor processed-context memo (keyed by the raw JSON)."""
-    got = _CTX_CACHE.get(ctx_json)
-    if got is None:
-        got = process_context(Context(), json.loads(ctx_json), Options())
-        _CTX_CACHE[ctx_json] = got
-    return got
+    """Per-executor processed-context memo (keyed by the raw JSON); a
+    context that fails to process raises and is not cached."""
+    return process_context(Context(), json.loads(ctx_json), Options())
 
 
 def _doc_op_column(df: DataFrame, json_col: str, out_col: str, fn) -> DataFrame:
@@ -170,16 +171,10 @@ def frame_column(
     return _doc_op_column(df, json_col, out_col, fn)
 
 
-_FRAME_CACHE: dict[str, list] = {}
-
-
+@functools.lru_cache(maxsize=EXECUTOR_CACHE_SIZE)
 def _expanded_frame(frame_json: str) -> list:
     """Per-executor expanded-frame memo (keyed by the frame's JSON)."""
-    got = _FRAME_CACHE.get(frame_json)
-    if got is None:
-        got = _expand_frame_doc(json.loads(frame_json))
-        _FRAME_CACHE[frame_json] = got
-    return got
+    return _expand_frame_doc(json.loads(frame_json))
 
 
 def _expand_frame_doc(frame_doc: dict) -> list:
@@ -522,8 +517,6 @@ def jsonld_canonical_hashes(spark, sf_dir: str) -> DataFrame:
 
 GRAPH_NS = "https://sparkld.dev/graph/"
 
-_NAMED_GRAPH_MEMO: dict[tuple[str, str], "DataFrame"] = {}
-
 
 def _named_graph_triples(spark, sf_dir: str) -> DataFrame:
     """Documents serialized as JSON-LD NAMED GRAPHS — the top-level
@@ -532,45 +525,39 @@ def _named_graph_triples(spark, sf_dir: str) -> DataFrame:
     REAL expand→node-map→to_rdf pipeline: each document's triples land
     in graph ``GRAPH_NS + (doc_id % 10)``, so the output is a QUAD
     table with ten named graphs (the GRAPH-clause witness the BGP
-    compiler's quad patterns query).  Memoized per (session, sf_dir)
-    like kg_queries._checkpointed_triples: both gated graph queries
-    scan one localCheckpointed table instead of re-running the Python
-    stage."""
+    compiler's quad patterns query).  Memoized per (session, sf_dir):
+    both gated graph queries scan one localCheckpointed table instead
+    of re-running the Python stage."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _NAMED_GRAPH_MEMO.get(key)
-    if got is not None:
-        return got
-    # spread the single-split test file before the per-document Python
-    # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
+    from jsonld_ex_spark.functions.partitioning import session_memo, spread_input
 
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps(_DOC_CTX)
-    docs = d.select(
-        "doc_id",
-        F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', "@id": "' + GRAPH_NS),
-            (F.col("doc_id") % 10).cast("string"),
-            F.lit('", "@graph": ['),
-            F.to_json(
-                F.struct(
-                    F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                    F.col("text").alias("name"),
-                    F.col("n_chars").cast("long").alias("chars"),
-                )
-            ),
-            F.lit("]}"),
-        ).alias("doc"),
-    )
-    out = to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
-        "doc_id"
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _NAMED_GRAPH_MEMO if k[0] != key[0]]:
-        del _NAMED_GRAPH_MEMO[k]
-    _NAMED_GRAPH_MEMO[key] = out
-    return out
+    def build() -> DataFrame:
+        # spread the single-split test file before the per-document Python
+        # kernel (partitioning.spread_input: no-op on a properly-split table)
+        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+        ctx_lit = json.dumps(_DOC_CTX)
+        docs = d.select(
+            "doc_id",
+            F.concat(
+                F.lit('{"@context": ' + ctx_lit + ', "@id": "' + GRAPH_NS),
+                (F.col("doc_id") % 10).cast("string"),
+                F.lit('", "@graph": ['),
+                F.to_json(
+                    F.struct(
+                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
+                        F.col("text").alias("name"),
+                        F.col("n_chars").cast("long").alias("chars"),
+                    )
+                ),
+                F.lit("]}"),
+            ).alias("doc"),
+        )
+        return to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
+            "doc_id"
+        ).localCheckpoint(eager=True)
+
+    return session_memo(spark, ("named_graph", sf_dir), build)
 
 
 def kg_bgp_graph_doc_chars(spark, sf_dir: str) -> DataFrame:
@@ -666,7 +653,6 @@ def kg_update_graph_ops(spark, sf_dir: str) -> DataFrame:
     )
 
 
-_LANG_DOC_MEMO: dict[tuple[str, str], "DataFrame"] = {}
 XSD_STR = "http://www.w3.org/2001/XMLSchema#string"
 
 _LANG_DOC_CTX = {
@@ -686,53 +672,49 @@ def _lang_doc_triples(spark, sf_dir: str) -> DataFrame:
     xsd:integer, and ``rating`` exists only for doc_id%4=0 (the
     OPTIONAL/BOUND witness).  This is the term-annotation witness table
     for the SPARQL LANG()/DATATYPE() accessors and the round-6
-    expression library.  Memoized per (session, sf_dir) like
-    _named_graph_triples."""
+    expression library.  Memoized per (session, sf_dir): a repeated
+    query scans the localCheckpointed table instead of re-running the
+    Python stage."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _LANG_DOC_MEMO.get(key)
-    if got is not None:
-        return got
-    # spread the single-split test file before the per-document Python
-    # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
+    from jsonld_ex_spark.functions.partitioning import session_memo, spread_input
 
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps(_LANG_DOC_CTX)
-    mod3 = F.col("doc_id") % 3
-    docs = d.select(
-        "doc_id",
-        F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', '),
-            F.regexp_replace(
-                F.to_json(
-                    F.struct(
-                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
+    def build() -> DataFrame:
+        # spread the single-split test file before the per-document Python
+        # kernel (partitioning.spread_input: no-op on a properly-split table)
+        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+        ctx_lit = json.dumps(_LANG_DOC_CTX)
+        mod3 = F.col("doc_id") % 3
+        docs = d.select(
+            "doc_id",
+            F.concat(
+                F.lit('{"@context": ' + ctx_lit + ', '),
+                F.regexp_replace(
+                    F.to_json(
                         F.struct(
-                            F.col("text").alias("@value"),
-                            F.when(mod3 == 0, F.lit("en"))
-                            .when(mod3 == 1, F.lit("fr"))
-                            .alias("@language"),
-                        ).alias("name"),
-                        F.col("n_chars").cast("long").alias("chars"),
-                        F.when(
-                            F.col("doc_id") % 4 == 0,
-                            (F.col("doc_id") % 5).cast("string"),
-                        ).alias("rating"),
-                    )
+                            F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
+                            F.struct(
+                                F.col("text").alias("@value"),
+                                F.when(mod3 == 0, F.lit("en"))
+                                .when(mod3 == 1, F.lit("fr"))
+                                .alias("@language"),
+                            ).alias("name"),
+                            F.col("n_chars").cast("long").alias("chars"),
+                            F.when(
+                                F.col("doc_id") % 4 == 0,
+                                (F.col("doc_id") % 5).cast("string"),
+                            ).alias("rating"),
+                        )
+                    ),
+                    r"^\{", "",
                 ),
-                r"^\{", "",
-            ),
-        ).alias("doc"),
-    )
-    out = to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
-        "doc_id"
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _LANG_DOC_MEMO if k[0] != key[0]]:
-        del _LANG_DOC_MEMO[k]
-    _LANG_DOC_MEMO[key] = out
-    return out
+            ).alias("doc"),
+        )
+        return to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
+            "doc_id"
+        ).localCheckpoint(eager=True)
+
+    return session_memo(spark, ("lang_doc", sf_dir), build)
 
 
 def kg_bgp_expr_doc_labels(spark, sf_dir: str) -> DataFrame:

@@ -35,6 +35,7 @@ end-to-end.
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Iterator
 
@@ -91,19 +92,15 @@ TRIPLE_SCHEMA = StructType(
     ]
 )
 
-_PROCESSED_CONTEXT: Context | None = None
 
-
+@functools.cache
 def _pipeline_context() -> Context:
     """Process CONV_CONTEXT once per executor process and cache.
 
     (At cluster scale this is the 'broadcast context cache': the
     processed term-definition table is built once, not per document.)
     """
-    global _PROCESSED_CONTEXT
-    if _PROCESSED_CONTEXT is None:
-        _PROCESSED_CONTEXT = process_context(Context(), CONV_CONTEXT, Options())
-    return _PROCESSED_CONTEXT
+    return process_context(Context(), CONV_CONTEXT, Options())
 
 
 def build_conversation_doc(conv_id: str, turns: list[dict]) -> dict:

@@ -68,3 +68,20 @@ def test_purchasers_without_errors_non_empty_witness(spark, tmp_path):  # noqa: 
         "EXCEPT SELECT user_id FROM events WHERE event_type = 'error'"
     ).fetchall())
     assert got == oracle
+
+
+def test_relational_queries_leave_callers_temp_views_alone(spark):  # noqa: F811
+    """The relational queries bind their input tables per call: a
+    caller's own temp view named like an input table (``orders``) still
+    resolves to the caller's data after ``topk_customers`` runs."""
+    from jsonld_ex_spark.functions.relational_ops import topk_customers
+    from tests.spark_fixtures import SF_DIR
+
+    spark.range(3).withColumnRenamed("id", "mine").createOrReplaceTempView("orders")
+    try:
+        assert topk_customers(spark, SF_DIR).count() > 0
+        mine = spark.table("orders")
+        assert mine.columns == ["mine"]
+        assert sorted(r["mine"] for r in mine.collect()) == [0, 1, 2]
+    finally:
+        spark.catalog.dropTempView("orders")
