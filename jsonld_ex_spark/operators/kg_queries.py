@@ -425,9 +425,12 @@ def _persisted_triples_dir(spark: SparkSession, sf_dir: str) -> str:
     from jsonld_ex_spark.operators.triples import write_triples
 
     def build() -> str:
-        tdir = tempfile.mkdtemp(prefix="bgp_tbl_") + "/triples"
+        # the removal covers the whole root: ensure_path_closure writes
+        # its closure tables beside the triples
+        root = tempfile.mkdtemp(prefix="bgp_tbl_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        tdir = root + "/triples"
         write_triples(_checkpointed_triples(spark, sf_dir), tdir, mode="overwrite")
-        atexit.register(shutil.rmtree, tdir, ignore_errors=True)
         return tdir
 
     return session_memo(spark, ("persisted_triples", sf_dir), build)
@@ -1444,11 +1447,12 @@ def kg_describe_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples plus — through the blank-node closure — its ENTIRE rdf:list
     spine (rest/first cells are blank nodes), so the description is the
     full reassembly a SPARQL client expects.  The pipeline's skolem
-    labels keep every blank node inside its conversation, so the
-    closure takes the label-local path (property_paths._seeded_closure):
-    the sampled conversations' lists are shuffled by conversation and
-    walked in Arrow, not O(log list-length) doubling supersteps over
-    the whole graph's blank-node edges.  The roots need no dedup:
+    labels keep every blank node inside its conversation and number
+    the list cells by position, so the closure takes the positional
+    path (property_paths._seeded_closure): each sampled conversation's
+    spine is read off its cell labels in Catalyst, not walked in Python
+    or by O(log list-length) doubling supersteps over the whole graph's
+    blank-node edges.  The roots need no dedup:
     bgp_describe's output is a set.  The DuckDB oracle recomputes the
     same CBD with a WITH RECURSIVE bnode walk."""
     from jsonld_ex_spark.operators.bgp import bgp_describe

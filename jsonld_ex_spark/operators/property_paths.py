@@ -34,21 +34,26 @@ literal is never a subject.
 
 Scale shape: a seeded closure (``A/B+/C``, ``A/B*/C`` and DESCRIBE's
 blank-node closure) first runs one cheap check over the closure's edge
-set: one aggregate, no join.  When every blank-node label is a
-per-document skolem label ``_:<p>.<n>``, every bnode→bnode edge keeps
-its prefix ``p``, and the edges never both leave and enter non-bnode
-nodes, every step after the first hop stays inside one document.  The
-closure is then LABEL-LOCAL: one hash-repartition by ``p`` of the
-starts and the edges, sorted by ``p`` within each partition, and one
-``mapInArrow`` depth-first walk that builds one document's adjacency
-at a time: linear in each document, cycle-safe, and with Python memory
-bounded by the largest document.  The walk returns
-zero-or-more reach, so a ``star`` inside a sequence seeds it with the
-prefix's pairs directly; a ``plus`` seeds it with their first hop.
-When the check fails (``_:b0``-style N-Quads labels, IRI-celled lists,
-cross-document blank nodes) the seeded closure falls back to PATH
-DOUBLING, as does every standalone closure: R ∪ R∘R per superstep,
-all-pairs reachability over the path's edge set in ceil(log2
+set: one aggregate, no join.  It picks one of three tiers.  When every
+blank-node label is a per-document skolem label ``_:<p>.<n>``, every
+bnode→bnode edge keeps its prefix ``p``, and the edges never both
+leave and enter non-bnode nodes, every step after the first hop stays
+inside one document: the closure is LABEL-LOCAL.  If moreover every
+label is a canonical position and every bnode→bnode edge goes from
+``_:<p>.<i>`` to ``_:<p>.<i+1>`` (the KG pipeline's ``@list`` cells),
+the closure is POSITIONAL and runs in Catalyst: one aggregate per
+prefix, one join and one ``sequence`` explode, with no Python worker
+(:func:`_chain_closure`).  Otherwise a label-local closure is one
+hash-repartition by ``p`` of the starts and the edges, sorted by ``p``
+within each partition, and one ``mapInArrow`` depth-first walk that
+builds one document's adjacency at a time: linear in each document,
+cycle-safe, and with Python memory bounded by the largest document.
+Both return zero-or-more reach, so a ``star`` inside a sequence seeds
+them with the prefix's pairs directly; a ``plus`` seeds them with their
+first hop.  When the check fails (``_:b0``-style N-Quads labels,
+IRI-celled lists, cross-document blank nodes) the seeded closure falls
+back to PATH DOUBLING, as does every standalone closure: R ∪ R∘R per
+superstep, all-pairs reachability over the path's edge set in ceil(log2
 diameter) supersteps, NOT one-hop-per-round, with per-round set-dedup
 as the map-side-combinable aggregate and a count-fixpoint stop, so
 cyclic graphs terminate (the rdf:list pointer-doubling walker would
@@ -164,9 +169,22 @@ def _label_prefix(col: str):
     return F.regexp_extract(F.col(col), _LABEL_RE, 1)
 
 
+# positional skolem label "_:<prefix>.<i>", as the compiled KG template
+# labels list cell i.  No leading zero, so each position has exactly
+# one label string; at most 18 digits, so i + 1 fits a BIGINT
+_POS_RE = r"\A_:(.+)\.(0|[1-9][0-9]{0,17})\z"
+
+
+def _position(col: str):
+    # try_cast: regexp_extract yields '' on no match, and an ANSI cast
+    # of '' raises
+    return F.regexp_extract(F.col(col), _POS_RE, 2).try_cast("bigint")
+
+
 class _Locality(NamedTuple):
     local: bool  # the closure over e never leaves a label prefix
     iri_subjects: bool  # some edge of e has a non-bnode subject
+    positional: bool = False  # local, and every bnode chain is i -> i+1
 
 
 def _label_local(e: DataFrame) -> _Locality:
@@ -182,18 +200,34 @@ def _label_local(e: DataFrame) -> _Locality:
     by the walk has no out-edge (or cannot be reached at all), so it
     ends its path; under (b) every other step stays inside ``p``.
     ``iri_subjects`` says whether a zero-length start on a non-bnode
-    node can take a hop at all."""
+    node can take a hop at all.
+
+    ``positional`` is ``local`` plus: every blank-node endpoint is a
+    positional label ``_:<p>.<i>`` (:data:`_POS_RE`), and every
+    bnode→bnode edge goes from ``_:<p>.<i>`` to exactly the string
+    ``_:<p>.<i+1>``.  Then the blank nodes a cell reaches are the run
+    of positions from it to the first cell without a successor
+    (:func:`_chain_closure`); a back edge, a skip, a branch or a
+    non-canonical label (``_:p.01``) fails the comparison."""
     bs, bo = F.col("s").startswith("_:"), F.col("o").startswith("_:")
     ps, po = _label_prefix("s"), _label_prefix("o")
+    i = _position("s")
+    succ = F.concat(F.lit("_:"), ps, F.lit("."), (i + 1).cast("string"))
     row = e.agg(
         F.bool_or((bs & (ps == "")) | (bo & (po == ""))).alias("unlabelled"),
         F.bool_or(bs & bo & (ps != po)).alias("cross"),
         F.bool_or(~bs).alias("other_subj"),
         F.bool_or(~bo).alias("other_obj"),
+        F.bool_or(
+            (bs & i.isNull()) | (bo & _position("o").isNull())
+            | (bs & bo & ~F.col("o").eqNullSafe(succ))
+        ).alias("unpositional"),
     ).first()
+    local = not (row.unlabelled or row.cross or (row.other_subj and row.other_obj))
     return _Locality(
-        local=not (row.unlabelled or row.cross or (row.other_subj and row.other_obj)),
+        local=local,
         iri_subjects=bool(row.other_subj),
+        positional=local and not row.unpositional,
     )
 
 
@@ -300,15 +334,78 @@ def _local_closure(starts: DataFrame, e: DataFrame) -> DataFrame:
     )
 
 
+def _chain_closure(starts: DataFrame, e: DataFrame) -> DataFrame:
+    """starts ∘ e* for a positional ``e`` (:func:`_label_local`) whose
+    non-bnode nodes take no further hop from ``starts``, in Catalyst:
+    one aggregate per label prefix, one join and one explode.  The
+    aggregate collects the positions ``i`` whose cell has a successor
+    edge ``i → i+1`` and the ``(i, o)`` pairs of its non-bnode objects.
+    A start on cell ``i`` of prefix ``p`` reaches the cells
+    ``i..end``, ``end`` the first position from ``i`` on without a
+    successor, relabelled ``_:<p>.<j>``, plus those cells' non-bnode
+    objects.  A prefix may hold several runs (two lists in one
+    document).  Any other start (a non-bnode object, a label that is
+    not positional, a prefix with no edges) is its own zero-length
+    pair; it is keyed by the pair, so such starts spread over the
+    partitions instead of piling into one.  ``starts`` is consumed
+    once; duplicate starts give duplicate pairs, which the caller's
+    output dedup removes."""
+    bo = F.col("o").startswith("_:")
+    runs = (
+        e.filter(F.col("s").startswith("_:"))
+        .select(_label_prefix("s").alias("_k"), _position("s").alias("_i"), "o")
+        .groupBy("_k")
+        .agg(
+            F.collect_set(F.when(bo, F.col("_i"))).alias("_succ"),
+            F.collect_list(F.when(~bo, F.struct("_i", "o"))).alias("_objs"),
+        )
+    )
+    i = _position("o")
+    keyed = starts.select(
+        "s", "o", i.alias("_at"),
+        F.coalesce(F.when(i.isNotNull(), _label_prefix("o")), F.concat_ws(" ", "s", "o")).alias("_k"),
+    )
+    at, succ = F.col("_at"), F.col("_succ")
+    # the run ends at the first position after `at` that is a successor
+    # but has none itself
+    end = F.when(
+        F.array_contains(succ, at),
+        F.array_min(F.filter(
+            F.array_except(F.transform(succ, lambda x: x + 1), succ), lambda x: x > at
+        )),
+    ).otherwise(at)
+    reach = F.concat(
+        F.transform(
+            F.sequence(at, F.col("_end")),
+            lambda j: F.concat(F.lit("_:"), F.col("_k"), F.lit("."), j.cast("string")),
+        ),
+        F.transform(
+            F.filter("_objs", lambda c: c["_i"].between(at, F.col("_end"))),
+            lambda c: c["o"],
+        ),
+    )
+    return (
+        keyed.join(runs, "_k", "left")
+        .withColumn("_end", end)
+        .select(
+            "s",
+            F.explode(
+                F.when(at.isNotNull() & succ.isNotNull(), reach).otherwise(F.array("o"))
+            ).alias("o"),
+        )
+    )
+
+
 def _seeded_closure(
     acc: DataFrame, e: DataFrame, max_iters: int, star: bool = False
 ) -> DataFrame:
     """acc ∘ e+ (or acc ∘ e* with ``star``) WITHOUT the all-pairs
     closure, seeded from acc's object side.  When ``e`` is label-local
     (:func:`_label_local`, one aggregate job) the closure is
-    :func:`_local_closure`: one shuffle and one Arrow walk, linear in
-    each document.  Its starts are ``acc∘e`` for ``plus``; for ``star``
-    they are ``acc`` itself, because the walk already returns
+    :func:`_chain_closure` if ``e`` is also positional (Catalyst only),
+    else :func:`_local_closure` (one shuffle and one Arrow walk); both
+    are linear in each document.  Their starts are ``acc∘e`` for
+    ``plus``; for ``star`` they are ``acc`` itself, because both return
     zero-or-more reach, and acc's non-bnode objects take one hop first
     (:func:`_iri_first_hop`) only when ``e`` has edges with non-bnode
     subjects.
@@ -332,6 +429,8 @@ def _seeded_closure(
             starts = _iri_first_hop(acc, e)
         else:
             starts = acc
+        if check.positional:
+            return _chain_closure(starts, e)
         return _local_closure(starts, e)
     jump = _dedup(e).localCheckpoint(eager=True)
     r = _dedup(_compose(acc, jump)).localCheckpoint(eager=True)

@@ -182,8 +182,10 @@ COMMENT = {
         "DESCRIBE/CBD (round 5): the reach roots ∘ bnode_edges* is "
         "materialized BEFORE this plan (scan of a checkpointed reach "
         "table) by the label-local star closure — one left join for the "
-        "roots' first hop, one shuffle by document and one Arrow walk, "
-        "with pointer doubling as the fallback; what remains is one "
+        "roots' first hop, then the positional closure over the "
+        "pipeline's list-cell labels (one aggregate per document, one "
+        "join, a sequence explode: no Python worker), with the Arrow "
+        "walk and pointer doubling as the fallbacks; what remains is one "
         "equi-join of reach against the triple table + set-dedup."
     ),
     "kg_bgp_expr_turn_keys": (

@@ -270,9 +270,37 @@ def test_materialized_closure_build_reuse_and_staleness(spark, tmp_path):  # noq
     assert ("d", "f") in pairs2 and pairs1 < pairs2
 
 
+def test_persisted_table_removal_covers_its_closures(spark, monkeypatch, tmp_path):  # noqa: F811
+    """The persisted gate table registers its exit-time removal on its
+    temp root, which holds both the triple table and the closure table
+    ``ensure_path_closure`` writes beside it."""
+    import atexit
+    import os
+    import shutil
+
+    from jsonld_ex_spark.operators import kg_queries
+    from jsonld_ex_spark.operators.kg_pipeline import TRIPLE_SCHEMA
+
+    rows = [(s, p, o, i, None, None, None, "a", None) for s, p, o, i in LOCAL_GRAPH]
+    monkeypatch.setattr(
+        kg_queries, "_checkpointed_triples",
+        lambda spark, sf_dir: spark.createDataFrame(rows, TRIPLE_SCHEMA),
+    )
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.append(a))
+    key = str(tmp_path / "no_such_sf")  # a session-memo key no other test built
+    cdir = kg_queries._persisted_conv_turn_closure_dir(spark, key)
+    try:
+        ((root,),) = registered
+        assert sorted(os.listdir(root)) == ["closure_conv_turns", "triples"]
+        assert os.path.dirname(cdir) == root
+    finally:
+        shutil.rmtree(os.path.dirname(cdir), ignore_errors=True)
+
+
 # --- label-local closure vs the doubling fallback ---------------------------
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 V = "urn:v:"
@@ -395,8 +423,8 @@ def test_label_local_closure_matches_doubling(spark, monkeypatch):  # noqa: F811
     the list paths also match DuckDB."""
     decisions, shipped, doubling = _closure_runs(spark, LOCAL_GRAPH, monkeypatch)
     # two list paths, DESCRIBE; only DESCRIBE's edges have IRI subjects
-    assert [(d.local, d.iri_subjects) for d in decisions] == [
-        (True, False), (True, False), (True, True)]
+    assert [tuple(d) for d in decisions] == [
+        (True, False, False), (True, False, False), (True, True, False)]
     assert shipped == doubling
     assert ("urn:c:c", "_:c.0") in shipped[1]  # the cycle reaches its head
     assert ("urn:c:f", "urn:cell:f") in shipped[1]  # IRI-object terminal
@@ -410,7 +438,7 @@ def test_star_first_hop_from_iri_starts(spark, monkeypatch):  # noqa: F811
     edges: the star keeps the IRI cell as its own zero-length pair and
     takes the first hop from it before the walk."""
     decisions, shipped, doubling = _closure_runs(spark, IRI_HEAD_GRAPH, monkeypatch)
-    assert [(d.local, d.iri_subjects) for d in decisions] == [(True, True)] * 3
+    assert [tuple(d) for d in decisions] == [(True, True, False)] * 3
     assert shipped == doubling
     star = shipped[0]
     assert ("urn:c:g", "urn:t:g.h") in star  # zero-length pair of the IRI cell
@@ -445,6 +473,7 @@ def test_non_local_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # no
         spark, FALLBACK_GRAPHS[name], monkeypatch
     )
     assert [d.local for d in decisions[:2]] == [False, False]
+    assert not any(d.positional for d in decisions[:2])
     if name != "iri_cells":  # DESCRIBE never follows IRI cells
         assert decisions[2].local is False
     assert shipped == doubling
@@ -498,6 +527,87 @@ def test_property_label_local_matches_doubling(spark, monkeypatch, case):  # noq
     assert shipped == doubling
 
 
+# --- positional tier vs the walk and the doubling fallback ------------------
+
+
+def _roots_sql(rows) -> str:
+    roots = sorted({s for s, p, _, _ in rows if p == f"{V}turns"})
+    return " UNION ALL ".join(f"SELECT '{r}' AS root" for r in roots)
+
+
+@st.composite
+def _positional_graph(draw):
+    """Conversations whose blank list cells carry positional labels
+    ``_:<doc>.<i>``: empty, one-cell and longer lists, or IRI-headed
+    lists; a second list in the same prefix after the first; some
+    triples duplicated."""
+    iri_head = draw(st.booleans())
+    rows = []
+    for d in range(draw(st.integers(1, 4))):
+        n = draw(st.integers(0, 5))
+        if iri_head:
+            rows += _iri_head_conv(f"d{d}", n)
+            continue
+        rows += _conv(f"d{d}", _bn(f"d{d}", n))
+        if draw(st.booleans()):
+            at = n + draw(st.integers(0, 2))
+            rows += _conv(f"d{d}x", [f"_:d{d}.{at + i}" for i in range(draw(st.integers(1, 3)))])
+    return rows + draw(st.lists(st.sampled_from(rows), max_size=4))
+
+
+# empty and one-cell lists, two more lists in prefix c (adjacent, and
+# after a gap) and one list's triples twice
+POSITIONAL_GRAPH = (
+    _conv("a", []) + _conv("b", _bn("b", 1)) + _conv("c", _bn("c", 3))
+    + _conv("cx", ["_:c.3", "_:c.4"]) + _conv("cy", ["_:c.6"]) + _conv("c", _bn("c", 3))
+)
+
+
+@given(_positional_graph())
+@example(POSITIONAL_GRAPH)
+@example(_iri_head_conv("g", 3) + _iri_head_conv("h", 0) + _iri_head_conv("i", 1) * 2)
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_property_positional_matches_doubling(spark, monkeypatch, rows):  # noqa: F811
+    """Every closure over a graph of positional list labels takes the
+    positional tier, and its ``A/B*/C``, ``A/B+`` and DESCRIBE results
+    equal the doubling loop's and DuckDB's."""
+    from jsonld_ex_spark.operators.bgp import bgp_describe_oracle_sql
+
+    decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
+    assert [d.positional for d in decisions] == [True] * 3
+    assert shipped == doubling
+    for path, got in zip(LIST_PATHS, shipped):
+        assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
+    assert sorted(shipped[2]) == _duck(bgp_describe_oracle_sql(_cte(rows), _roots_sql(rows)))
+
+
+UNPOSITIONAL_GRAPHS = {
+    "leading_zero": _conv("p", ["_:p.01"]) + _conv("q", _bn("q", 2)),
+    "skip": _conv("p", ["_:p.0", "_:p.2", "_:p.3"]),
+    "branch": _conv("p", _bn("p", 3), extra=[(0, 2)]),
+    "back_edge": _conv("p", _bn("p", 3), extra=[(2, 0)]),
+    "19_digits": _conv("p", [f"_:p.{10**18 - 1}", f"_:p.{10**18}"]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(UNPOSITIONAL_GRAPHS))
+def test_label_local_unpositional_graphs_take_the_walk(spark, monkeypatch, name):  # noqa: F811
+    """Label-local graphs whose labels or edges break the positional
+    proof (a non-canonical label, a skip, a branch, a back edge, a
+    position past 18 digits) leave the positional tier for the walk,
+    and still equal the doubling loop and DuckDB."""
+    rows = UNPOSITIONAL_GRAPHS[name]
+    decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
+    assert [(d.local, d.positional) for d in decisions] == [(True, False)] * 3
+    assert shipped == doubling
+    for path, got in zip(LIST_PATHS, shipped):
+        assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
+
+
 DUP_PATHS = [
     ("seq", f"{V}turns", f"{V}first"),
     ("alt", f"{V}rest", ("inv", ("inv", f"{V}rest"))),  # both branches equal
@@ -507,16 +617,21 @@ DUP_PATHS = [
 ]
 
 
-@pytest.mark.parametrize("graph", ["label_local", "unprefixed"])
+@pytest.mark.parametrize("graph", ["positional", "label_local", "unprefixed"])
 def test_duplicate_triples_keep_set_semantics(spark, graph):  # noqa: F811
     """Set semantics hold at the output even though the leaves, joins
     and unions inside a path no longer deduplicate: over a table that
     holds every triple three times, each path and DESCRIBE equals the
     result over the deduplicated table and the DuckDB oracle, on the
-    label-local walk and on the ``_:b0`` doubling fallback."""
+    positional closure, the label-local walk and the ``_:b0`` doubling
+    fallback."""
     from jsonld_ex_spark.operators.bgp import bgp_describe, bgp_describe_oracle_sql
 
-    rows = LOCAL_GRAPH if graph == "label_local" else FALLBACK_GRAPHS["unprefixed"]
+    rows = {
+        "positional": POSITIONAL_GRAPH,
+        "label_local": LOCAL_GRAPH,
+        "unprefixed": FALLBACK_GRAPHS["unprefixed"],
+    }[graph]
     tripled = spark.createDataFrame(rows * 3, _SCHEMA)
     once = spark.createDataFrame(rows, _SCHEMA)
     for path in DUP_PATHS:
