@@ -2061,17 +2061,13 @@ def bgp_describe(
     closure (property_paths._seeded_closure) over the bnode-object edge
     relation, starting from the (root, root) pairs.  Every object of
     that relation is a blank node, so when the graph's blank nodes
-    carry per-document labels (``_:<conv_id>.<n>`` from the KG
-    pipeline) and no bnode→bnode edge crosses documents, the closure is
-    label-local: one left join takes each root's first hop and keeps
-    the root itself, and the result is the positional closure when the
-    labels are list positions chained ``i → i+1`` (the pipeline's
-    @list spine: one aggregate per document and one join, in Catalyst),
-    else one shuffle by label prefix and one Arrow walk per document
-    (a root bound many times, the bag output of bgp_select, is walked
-    once per document).  Both are linear in the document's size (a
-    conversation's CBD includes its whole @list spine), and the roots
-    are evaluated once in either plan.
+    carry positional per-document labels (``_:<conv_id>.<i>`` from the
+    KG pipeline's @list spine) chained ``i → i+1``, the closure is
+    positional: one left join takes each root's first hop and keeps
+    the root itself, then one aggregate per document and one join read
+    each cell's reach off its label, in Catalyst.  That is linear in
+    the document's size (a conversation's CBD includes its whole @list
+    spine), and the roots are evaluated once.
     Otherwise it falls back to pointer doubling, O(log depth)
     supersteps whose jump table doubles over EVERY blank-node edge of
     the graph, not only the described nodes'.  Set semantics come from

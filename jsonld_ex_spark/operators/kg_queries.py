@@ -1080,7 +1080,7 @@ def kg_path_conv_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-or-more closure.  The Spark side answers from the session's
     shared chain walk (:func:`_conv_turn_path_rel`, the same pair set);
     the generic evaluator (property_paths.eval_path) would run the
-    label-local seeded closure over these skolem-labelled cells.  The
+    positional seeded closure over these skolem-labelled cells.  The
     DuckDB oracle evaluates the path AST with a WITH RECURSIVE
     fixpoint — two independent engines must agree pair-for-pair."""
     from jsonld_ex_spark.operators.property_paths import path_select

@@ -34,26 +34,20 @@ literal is never a subject.
 
 Scale shape: a seeded closure (``A/B+/C``, ``A/B*/C`` and DESCRIBE's
 blank-node closure) first runs one cheap check over the closure's edge
-set: one aggregate, no join.  It picks one of three tiers.  When every
-blank-node label is a per-document skolem label ``_:<p>.<n>``, every
-bnode→bnode edge keeps its prefix ``p``, and the edges never both
-leave and enter non-bnode nodes, every step after the first hop stays
-inside one document: the closure is LABEL-LOCAL.  If moreover every
-label is a canonical position and every bnode→bnode edge goes from
+set: one aggregate, no join.  When every blank-node label is a
+canonical position ``_:<p>.<i>``, every bnode→bnode edge goes from
 ``_:<p>.<i>`` to ``_:<p>.<i+1>`` (the KG pipeline's ``@list`` cells),
-the closure is POSITIONAL and runs in Catalyst: one aggregate per
-prefix, one join and one ``sequence`` explode, with no Python worker
-(:func:`_chain_closure`).  Otherwise a label-local closure is one
-hash-repartition by ``p`` of the starts and the edges, sorted by ``p``
-within each partition, and one ``mapInArrow`` depth-first walk that
-builds one document's adjacency at a time: linear in each document,
-cycle-safe, and with Python memory bounded by the largest document.
-Both return zero-or-more reach, so a ``star`` inside a sequence seeds
-them with the prefix's pairs directly; a ``plus`` seeds them with their
-first hop.  When the check fails (``_:b0``-style N-Quads labels,
-IRI-celled lists, cross-document blank nodes) the seeded closure falls
-back to PATH DOUBLING, as does every standalone closure: R ∪ R∘R per
-superstep, all-pairs reachability over the path's edge set in ceil(log2
+and the edges never both leave and enter non-bnode nodes, the closure
+is POSITIONAL: every step after the first hop stays inside one
+document's run of cells, so it runs in Catalyst as one aggregate per
+prefix, one join and one ``sequence`` explode (:func:`_chain_closure`),
+linear in each document.  It returns zero-or-more reach, so a ``star``
+inside a sequence seeds it with the prefix's pairs directly; a
+``plus`` seeds it with its first hop.  When the check fails
+(``_:b0``-style N-Quads labels, IRI-celled lists, cross-document blank
+nodes, branches, cycles, ``jsonld_ops``' node-map labels) the seeded
+closure falls back to PATH DOUBLING, as does every standalone closure:
+R ∪ R∘R per superstep, all-pairs reachability over the path's edge set in ceil(log2
 diameter) supersteps, NOT one-hop-per-round, with per-round set-dedup
 as the map-side-combinable aggregate and a count-fixpoint stop, so
 cyclic graphs terminate (the rdf:list pointer-doubling walker would
@@ -70,9 +64,8 @@ doubling loop.
 
 from __future__ import annotations
 
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -159,20 +152,16 @@ def _closure(
     )
 
 
-# per-document skolem label "_:<prefix>.<ordinal>" (kg_pipeline labels
-# every blank node of a conversation "_:<conv_id>.<n>"); \A/\z, not
-# ^/$: Java's '$' also matches before a trailing newline
-_LABEL_RE = r"\A_:(.+)\.[0-9]+\z"
-
-
-def _label_prefix(col: str):
-    return F.regexp_extract(F.col(col), _LABEL_RE, 1)
-
-
 # positional skolem label "_:<prefix>.<i>", as the compiled KG template
-# labels list cell i.  No leading zero, so each position has exactly
-# one label string; at most 18 digits, so i + 1 fits a BIGINT
+# labels list cell i (every blank node of a conversation is
+# "_:<conv_id>.<n>").  No leading zero, so each position has exactly one
+# label string; at most 18 digits, so i + 1 fits a BIGINT.  \A/\z, not
+# ^/$: Java's '$' also matches before a trailing newline
 _POS_RE = r"\A_:(.+)\.(0|[1-9][0-9]{0,17})\z"
+
+
+def _prefix(col: str):
+    return F.regexp_extract(F.col(col), _POS_RE, 1)
 
 
 def _position(col: str):
@@ -181,101 +170,45 @@ def _position(col: str):
     return F.regexp_extract(F.col(col), _POS_RE, 2).try_cast("bigint")
 
 
-class _Locality(NamedTuple):
-    local: bool  # the closure over e never leaves a label prefix
+class _ChainCheck(NamedTuple):
+    positional: bool  # every bnode chain of e is _:<p>.<i> -> _:<p>.<i+1>
     iri_subjects: bool  # some edge of e has a non-bnode subject
-    positional: bool = False  # local, and every bnode chain is i -> i+1
 
 
-def _label_local(e: DataFrame) -> _Locality:
-    """What one aggregate over ``e`` tells a closure.  ``local`` is True
-    when the closure never leaves one label prefix after its first hop:
+def _chain_check(e: DataFrame) -> _ChainCheck:
+    """What one aggregate over ``e`` tells a seeded closure.
+    ``positional`` is True when
 
-    (a) every blank-node endpoint has a label ``_:<p>.<digits>``;
-    (b) every bnode→bnode edge has the same ``p`` at both ends;
+    (a) every blank-node endpoint has a positional label ``_:<p>.<i>``
+        (:data:`_POS_RE`);
+    (b) every bnode→bnode edge goes from ``_:<p>.<i>`` to exactly the
+        string ``_:<p>.<i+1>``;
     (c) no edge has a non-bnode subject, or none has a non-bnode object.
 
     Blank nodes are told apart by the ``_:`` string prefix, because
     the closure joins on strings.  Under (c) a non-bnode node reached
-    by the walk has no out-edge (or cannot be reached at all), so it
-    ends its path; under (b) every other step stays inside ``p``.
+    from a start has no out-edge (or cannot be reached at all), so it
+    ends its path; under (a) and (b) the blank nodes a cell reaches are
+    the run of positions from it to the first cell without a successor,
+    all in its own document (:func:`_chain_closure`).  A back edge, a
+    skip, a branch or a non-canonical label (``_:p.01``) fails (b).
     ``iri_subjects`` says whether a zero-length start on a non-bnode
-    node can take a hop at all.
-
-    ``positional`` is ``local`` plus: every blank-node endpoint is a
-    positional label ``_:<p>.<i>`` (:data:`_POS_RE`), and every
-    bnode→bnode edge goes from ``_:<p>.<i>`` to exactly the string
-    ``_:<p>.<i+1>``.  Then the blank nodes a cell reaches are the run
-    of positions from it to the first cell without a successor
-    (:func:`_chain_closure`); a back edge, a skip, a branch or a
-    non-canonical label (``_:p.01``) fails the comparison."""
+    node can take a hop at all."""
     bs, bo = F.col("s").startswith("_:"), F.col("o").startswith("_:")
-    ps, po = _label_prefix("s"), _label_prefix("o")
     i = _position("s")
-    succ = F.concat(F.lit("_:"), ps, F.lit("."), (i + 1).cast("string"))
+    succ = F.concat(F.lit("_:"), _prefix("s"), F.lit("."), (i + 1).cast("string"))
     row = e.agg(
-        F.bool_or((bs & (ps == "")) | (bo & (po == ""))).alias("unlabelled"),
-        F.bool_or(bs & bo & (ps != po)).alias("cross"),
-        F.bool_or(~bs).alias("other_subj"),
-        F.bool_or(~bo).alias("other_obj"),
         F.bool_or(
             (bs & i.isNull()) | (bo & _position("o").isNull())
             | (bs & bo & ~F.col("o").eqNullSafe(succ))
         ).alias("unpositional"),
+        F.bool_or(~bs).alias("other_subj"),
+        F.bool_or(~bo).alias("other_obj"),
     ).first()
-    local = not (row.unlabelled or row.cross or (row.other_subj and row.other_obj))
-    return _Locality(
-        local=local,
+    return _ChainCheck(
+        positional=not (row.unpositional or (row.other_subj and row.other_obj)),
         iri_subjects=bool(row.other_subj),
-        positional=local and not row.unpositional,
     )
-
-
-_WALK_BATCH = 8192
-
-
-def _walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow body of the label-local closure.  A partition holds
-    whole label prefixes ``_k``, sorted by ``(_k, _seed)``: first a
-    prefix's edges ``(s, o)`` (subject in the prefix), then its seeds
-    ``(x, y)`` (object in the prefix), sorted by ``x``.  Builds one
-    prefix's adjacency at a time, so Python memory is bounded by the
-    largest document, and emits ``(x, z)`` for every ``z`` reachable
-    from ``y`` by zero or more edges: a depth-first walk, cycle-safe,
-    whose visited set is shared by all of one ``x``'s seeds in the
-    prefix.  So each ``(x, z)`` of a prefix is emitted once, however
-    many of ``x``'s seeds reach ``z``, and a duplicate seed walks
-    nothing."""
-    key, adj, src, seen = None, {}, None, set()
-    out_s: list[str] = []
-    out_o: list[str] = []
-    for b in batches:
-        cols = b.to_pydict()
-        for k, s, o, is_seed in zip(cols["_k"], cols["s"], cols["o"], cols["_seed"]):
-            if k != key:
-                key, adj, src = k, {}, None
-            if not is_seed:
-                adj.setdefault(s, []).append(o)
-                continue
-            if s != src:
-                src, seen = s, set()
-            if o in seen:
-                continue
-            seen.add(o)
-            new, stack = [o], [o]
-            while stack:
-                for z in adj.get(stack.pop(), ()):
-                    if z not in seen:
-                        seen.add(z)
-                        new.append(z)
-                        stack.append(z)
-            out_s.extend([s] * len(new))
-            out_o.extend(new)
-            if len(out_s) >= _WALK_BATCH:
-                yield pa.RecordBatch.from_pydict({"s": out_s, "o": out_o})
-                out_s, out_o = [], []
-    if out_s:
-        yield pa.RecordBatch.from_pydict({"s": out_s, "o": out_o})
 
 
 def _compose(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -302,40 +235,8 @@ def _iri_first_hop(acc: DataFrame, e: DataFrame) -> DataFrame:
     )
 
 
-def _local_closure(starts: DataFrame, e: DataFrame) -> DataFrame:
-    """starts ∘ e* for a label-local ``e`` (:func:`_label_local`) whose
-    non-bnode nodes take no further hop from ``starts``: one
-    hash-repartition of the starts and of the bnode-subject edges by
-    label prefix, and one :func:`_walk` per partition, which returns
-    every start's zero-or-more reach.  ``starts`` is consumed once.  A
-    start whose object is not a labelled blank node has nothing to
-    walk; ``_walk`` passes it through as its own zero-length pair, and
-    it is keyed by the pair, so such starts spread over the partitions
-    instead of piling into one.  Every bnode-subject edge is shipped,
-    also those of prefixes that no start reaches: a semi-join would
-    consume ``starts`` a second time.  Duplicate starts walk once
-    (:func:`_walk`), but the result may still hold duplicates (one
-    node, e.g. ``rdf:nil``, is reached from many prefixes); the caller
-    deduplicates once, at its output."""
-    prefix = _label_prefix("o")
-    seeds = starts.select(
-        "s", "o",
-        F.when(prefix != "", prefix).otherwise(F.concat_ws(" ", "s", "o")).alias("_k"),
-        F.lit(True).alias("_seed"),
-    )
-    edges = e.filter(F.col("s").startswith("_:")).select(
-        "s", "o", _label_prefix("s").alias("_k"), F.lit(False).alias("_seed")
-    )
-    return (
-        seeds.unionByName(edges)
-        .repartition("_k")
-        .sortWithinPartitions("_k", "_seed", "s")
-        .mapInArrow(_walk, "s string, o string")
-    )
-
-
 def _chain_closure(starts: DataFrame, e: DataFrame) -> DataFrame:
-    """starts ∘ e* for a positional ``e`` (:func:`_label_local`) whose
+    """starts ∘ e* for a positional ``e`` (:func:`_chain_check`) whose
     non-bnode nodes take no further hop from ``starts``, in Catalyst:
     one aggregate per label prefix, one join and one explode.  The
     aggregate collects the positions ``i`` whose cell has a successor
@@ -353,19 +254,18 @@ def _chain_closure(starts: DataFrame, e: DataFrame) -> DataFrame:
     bo = F.col("o").startswith("_:")
     runs = (
         e.filter(F.col("s").startswith("_:"))
-        .select(_label_prefix("s").alias("_k"), _position("s").alias("_i"), "o")
+        .select(_prefix("s").alias("_k"), _position("s").alias("_i"), "o")
         .groupBy("_k")
         .agg(
             F.collect_set(F.when(bo, F.col("_i"))).alias("_succ"),
             F.collect_list(F.when(~bo, F.struct("_i", "o"))).alias("_objs"),
         )
     )
-    i = _position("o")
-    keyed = starts.select(
-        "s", "o", i.alias("_at"),
-        F.coalesce(F.when(i.isNotNull(), _label_prefix("o")), F.concat_ws(" ", "s", "o")).alias("_k"),
-    )
     at, succ = F.col("_at"), F.col("_succ")
+    keyed = starts.select("s", "o", _position("o").alias("_at")).select(
+        "s", "o", "_at",
+        F.when(at.isNotNull(), _prefix("o")).otherwise(F.concat_ws(" ", "s", "o")).alias("_k"),
+    )
     # the run ends at the first position after `at` that is a successor
     # but has none itself
     end = F.when(
@@ -400,38 +300,34 @@ def _seeded_closure(
     acc: DataFrame, e: DataFrame, max_iters: int, star: bool = False
 ) -> DataFrame:
     """acc ∘ e+ (or acc ∘ e* with ``star``) WITHOUT the all-pairs
-    closure, seeded from acc's object side.  When ``e`` is label-local
-    (:func:`_label_local`, one aggregate job) the closure is
-    :func:`_chain_closure` if ``e`` is also positional (Catalyst only),
-    else :func:`_local_closure` (one shuffle and one Arrow walk); both
-    are linear in each document.  Their starts are ``acc∘e`` for
-    ``plus``; for ``star`` they are ``acc`` itself, because both return
-    zero-or-more reach, and acc's non-bnode objects take one hop first
-    (:func:`_iri_first_hop`) only when ``e`` has edges with non-bnode
-    subjects.
+    closure, seeded from acc's object side.  When ``e`` is positional
+    (:func:`_chain_check`, one aggregate job) the closure is
+    :func:`_chain_closure`: Catalyst only, linear in each document.  Its
+    starts are ``acc∘e`` for ``plus``; for ``star`` they are ``acc``
+    itself, because it returns zero-or-more reach, and acc's non-bnode
+    objects take one hop first (:func:`_iri_first_hop`) only when ``e``
+    has edges with non-bnode subjects.
 
     Otherwise it falls back to frontier doubling: R_0 = acc∘e (one
     step); each round R ← R ∪ R∘J and J ← J∘J (J starts as e, step size
     doubles), so after k rounds R covers path lengths 1..2^k from the
     SEEDS, in O(log depth) rounds of two eager localCheckpoints and a
-    count; ``star`` adds acc's zero-length pairs.  R stays restricted
-    to the seeds' reach, but J∘J squares EVERY edge of ``e`` each
-    round, so the work grows with the whole edge set's 2^k-step pairs,
-    not with the answer: DESCRIBE of three conversations doubles the
-    jump table over every blank-node edge in the graph.  Each round
-    deduplicates, because the count fixpoint needs set semantics.
-    ``max_iters`` bounds only this loop."""
-    check = _label_local(e)
-    if check.local:
+    count; ``star`` adds acc's zero-length pairs, deduplicated with
+    them.  R stays restricted to the seeds' reach, but J∘J squares
+    EVERY edge of ``e`` each round, so the work grows with the whole
+    edge set's 2^k-step pairs, not with the answer: DESCRIBE of three
+    conversations doubles the jump table over every blank-node edge in
+    the graph.  Each round deduplicates, because the count fixpoint
+    needs set semantics.  ``max_iters`` bounds only this loop."""
+    check = _chain_check(e)
+    if check.positional:
         if not star:
             starts = _compose(acc, e)
         elif check.iri_subjects:
             starts = _iri_first_hop(acc, e)
         else:
             starts = acc
-        if check.positional:
-            return _chain_closure(starts, e)
-        return _local_closure(starts, e)
+        return _chain_closure(starts, e)
     jump = _dedup(e).localCheckpoint(eager=True)
     r = _dedup(_compose(acc, jump)).localCheckpoint(eager=True)
     n = r.count()
@@ -439,7 +335,7 @@ def _seeded_closure(
         r2 = _dedup(r.unionByName(_compose(r, jump))).localCheckpoint(eager=True)
         n2 = r2.count()
         if n2 == n:
-            return acc.unionByName(r2) if star else r2
+            return _dedup(acc.unionByName(r2)) if star else r2
         r, n = r2, n2
         # jump stays the EXACTLY-2^k-step table (pure composition, no
         # union): R already holds all shorter lengths, so R∘J_k extends

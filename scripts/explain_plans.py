@@ -181,12 +181,12 @@ COMMENT = {
     "kg_describe_convs": (
         "DESCRIBE/CBD (round 5): the reach roots ∘ bnode_edges* is "
         "materialized BEFORE this plan (scan of a checkpointed reach "
-        "table) by the label-local star closure — one left join for the "
-        "roots' first hop, then the positional closure over the "
-        "pipeline's list-cell labels (one aggregate per document, one "
-        "join, a sequence explode: no Python worker), with the Arrow "
-        "walk and pointer doubling as the fallbacks; what remains is one "
-        "equi-join of reach against the triple table + set-dedup."
+        "table) by the positional star closure — one left join for the "
+        "roots' first hop, then one aggregate per document over the "
+        "pipeline's list-cell labels, one join and a sequence explode "
+        "(no Python worker), with pointer doubling as the fallback; what "
+        "remains is one equi-join of reach against the triple table + "
+        "set-dedup."
     ),
     "kg_bgp_expr_turn_keys": (
         "Expression library + multi-var VALUES (round 6): STRBEFORE/"

@@ -367,8 +367,7 @@ def test_label_local_closure_plans_are_lean(spark, monkeypatch):  # noqa: F811
     (at most 3 shuffles, 5 parquet scans); DESCRIBE's reach evaluates
     the roots' BGP once, feeding the closure and the zero-length pairs
     from one scan.  The pipeline's labels are positional, so neither
-    plan starts a Python worker; relabelled so that they are label-local
-    but not positional, the list walk plans exactly one Arrow walk."""
+    plan starts a Python worker."""
     import re
 
     from jsonld_ex_spark.operators.bgp import bgp_describe
@@ -376,10 +375,9 @@ def test_label_local_closure_plans_are_lean(spark, monkeypatch):  # noqa: F811
     from jsonld_ex_spark.operators.property_paths import eval_path
     from jsonld_ex_spark.sources.transcripts import VOCAB
 
-    list_walk = ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF_NS}rest>"), f"<{RDF_NS}first>")
     t = spark.read.parquet(kg_queries._persisted_triples_dir(spark, SF))
     plans = _checkpoint_plans(spark, monkeypatch)
-    eval_path(t, list_walk)
+    eval_path(t, ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF_NS}rest>"), f"<{RDF_NS}first>"))
     (walk,) = plans
     assert walk.count("Exchange hashpartitioning") <= 3, walk
     assert walk.count("Scan parquet") <= 5, walk
@@ -393,12 +391,3 @@ def test_label_local_closure_plans_are_lean(spark, monkeypatch):  # noqa: F811
     assert sum("pred#" in cols for cols in scans) == 1, reach
     for plan in (walk, reach):
         assert "MapInArrow" not in plan and "Python" not in plan, plan
-
-    # a trailing 0 on every label keeps each document's prefix (label-
-    # local) but turns the i -> i+1 edges into i0 -> (i+1)0
-    plans.clear()
-    relabel = {c: F.when(F.col(c).startswith("_:"), F.concat(c, F.lit("0"))).otherwise(F.col(c))
-               for c in ("subj", "obj")}
-    eval_path(t.withColumns(relabel), list_walk)
-    (walk,) = plans
-    assert walk.count("MapInArrow") == 1, walk

@@ -166,7 +166,7 @@ def test_seq_star_rewrite_equivalence(tiny):
     """The seq-star/opt identity-elimination rewrite must be invisible:
     Spark (rewritten) vs DuckDB (direct form) on multi-star sequences,
     and the rewriter's output shape is as derived: a star after the
-    head of a sequence stays (the seeded walk is zero-or-more), a head
+    head of a sequence stays (the seeded closure is zero-or-more), a head
     star and every opt are eliminated."""
     from jsonld_ex_spark.operators.property_paths import _rewrite
 
@@ -298,7 +298,7 @@ def test_persisted_table_removal_covers_its_closures(spark, monkeypatch, tmp_pat
         shutil.rmtree(os.path.dirname(cdir), ignore_errors=True)
 
 
-# --- label-local closure vs the doubling fallback ---------------------------
+# --- seeded closures vs the doubling fallback --------------------------------
 
 from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
@@ -309,7 +309,7 @@ LIST_PATHS = [
     ("seq", f"{V}turns", ("star", f"{V}rest"), f"{V}first"),
     ("seq", f"{V}turns", ("plus", f"{V}rest")),
 ]
-# the same paths in the form a star took before it seeded the walk
+# the same paths in the form a star took before it seeded the closure
 # itself: A/B*/C = A/C ∪ A/B+/C
 ALT_PATHS = [
     ("alt", ("seq", f"{V}turns", f"{V}first"),
@@ -339,8 +339,8 @@ def _iri_head_conv(doc: str, n: int, extra=()) -> list[tuple]:
     """Conversation ``urn:c:<doc>`` whose list starts at the IRI cell
     ``urn:cell:<doc>`` and goes on through ``n`` blank cells; the last
     cell has no rest edge.  No rest edge has an IRI object, so the rest
-    edges stay label-local while some have an IRI subject: the star
-    walk's first-hop case."""
+    edges stay positional while some have an IRI subject: the star
+    closure's first-hop case."""
     head, cells = f"urn:cell:{doc}", _bn(doc, n)
     rows = [(f"urn:c:{doc}", f"{V}turns", head, True),
             (head, f"{V}first", f"urn:t:{doc}.h", True)]
@@ -353,7 +353,7 @@ def _iri_head_conv(doc: str, n: int, extra=()) -> list[tuple]:
 
 def _closure_runs(spark, rows, monkeypatch):
     """Evaluate every LIST_PATHS path and a DESCRIBE of every
-    conversation as shipped, recording what the label-local check
+    conversation as shipped, recording what the positional check
     decided, and the same closures with the check forced off: the
     ALT_PATHS forms through the doubling loop.  Returns (decisions,
     shipped results, doubling results)."""
@@ -362,7 +362,7 @@ def _closure_runs(spark, rows, monkeypatch):
 
     df = spark.createDataFrame(rows, _SCHEMA)
     roots = sorted({s for s, p, _, _ in rows if p == f"{V}turns"})
-    check = property_paths._label_local
+    check = property_paths._chain_check
     decisions = []
 
     def spy(e):
@@ -376,23 +376,15 @@ def _closure_runs(spark, rows, monkeypatch):
         out.append(set(tuple(r) for r in bgp_describe(df, roots, max_iters=8).collect()))
         return out
 
-    # keep every shuffle partition: coalesced into one, a walk would
-    # see all prefixes at once and hide a routing error
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        with monkeypatch.context() as m:
-            m.setattr(property_paths, "_label_local", spy)
-            shipped = run(LIST_PATHS)
-        with monkeypatch.context() as m:
-            m.setattr(
-                property_paths, "_label_local",
-                lambda e: property_paths._Locality(False, False),
-            )
-            doubling = run(ALT_PATHS)
-    finally:
-        spark.conf.set(key, prev)
+    with monkeypatch.context() as m:
+        m.setattr(property_paths, "_chain_check", spy)
+        shipped = run(LIST_PATHS)
+    with monkeypatch.context() as m:
+        m.setattr(
+            property_paths, "_chain_check",
+            lambda e: property_paths._ChainCheck(False, False),
+        )
+        doubling = run(ALT_PATHS)
     return decisions, shipped, doubling
 
 
@@ -407,24 +399,23 @@ LOCAL_GRAPH = (
 )
 
 
-# IRI head cells with a cycle back to the first blank cell, an empty
-# tail and a one-cell tail
+# IRI head cells with a three-cell, an empty and a one-cell tail
 IRI_HEAD_GRAPH = (
-    _iri_head_conv("g", 3, extra=[(2, 0)])
+    _iri_head_conv("g", 3)
     + _iri_head_conv("h", 0)
     + _iri_head_conv("i", 1)
 )
 
 
 def test_label_local_closure_matches_doubling(spark, monkeypatch):  # noqa: F811
-    """Every closure over a label-local graph takes the local path and
-    returns exactly the doubling loop's (s, o) sets, for the list
-    paths (A/B*/C against its old A/C ∪ A/B+/C form) and for DESCRIBE;
-    the list paths also match DuckDB."""
+    """A graph whose blank nodes stay inside their documents but break
+    the positional proof (a cycle, a branch) takes the seeded doubling
+    loop, and its list paths (A/B*/C against its old A/C ∪ A/B+/C
+    form) and DESCRIBE return exactly the unseeded doubling loop's
+    (s, o) sets; the list paths also match DuckDB."""
     decisions, shipped, doubling = _closure_runs(spark, LOCAL_GRAPH, monkeypatch)
     # two list paths, DESCRIBE; only DESCRIBE's edges have IRI subjects
-    assert [tuple(d) for d in decisions] == [
-        (True, False, False), (True, False, False), (True, True, False)]
+    assert [tuple(d) for d in decisions] == [(False, False), (False, False), (False, True)]
     assert shipped == doubling
     assert ("urn:c:c", "_:c.0") in shipped[1]  # the cycle reaches its head
     assert ("urn:c:f", "urn:cell:f") in shipped[1]  # IRI-object terminal
@@ -436,22 +427,21 @@ def test_label_local_closure_matches_doubling(spark, monkeypatch):  # noqa: F811
 def test_star_first_hop_from_iri_starts(spark, monkeypatch):  # noqa: F811
     """A/B*/C where A reaches IRI cells that B leaves by IRI-subject
     edges: the star keeps the IRI cell as its own zero-length pair and
-    takes the first hop from it before the walk."""
+    takes the first hop from it before the positional closure."""
     decisions, shipped, doubling = _closure_runs(spark, IRI_HEAD_GRAPH, monkeypatch)
-    assert [tuple(d) for d in decisions] == [(True, True, False)] * 3
+    assert [tuple(d) for d in decisions] == [(True, True)] * 3
     assert shipped == doubling
     star = shipped[0]
     assert ("urn:c:g", "urn:t:g.h") in star  # zero-length pair of the IRI cell
     assert ("urn:c:h", "urn:t:h.h") in star  # ... with no tail at all
-    assert {("urn:c:g", f"urn:t:g.{i}") for i in range(3)} <= star  # first hop + cycle
+    assert {("urn:c:g", f"urn:t:g.{i}") for i in range(3)} <= star  # first hop + run
     for path, got in zip(LIST_PATHS, shipped):
         assert sorted(got) == _duck(path_oracle_sql(_cte(IRI_HEAD_GRAPH), "?s", path, "?o"))
 
 
 FALLBACK_GRAPHS = {
     # one bnode->bnode edge crossing from prefix a to prefix g, through
-    # a chain of six prefixes, so the walk would have to leave its
-    # partition
+    # a chain of six prefixes, so the reach leaves its document
     "cross_prefix": _conv("a", _bn("a", 2))
     + _conv("g", ["_:g.0", "_:h.0", "_:i.0", "_:j.0", "_:k.0", "_:l.0"])
     + [("_:a.1", f"{V}rest", "_:g.0", True)],
@@ -467,15 +457,14 @@ FALLBACK_GRAPHS = {
 def test_non_local_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # noqa: F811
     """A graph that breaks any of the three checks must take the
     doubling loop; the cross-prefix case is built so that a check
-    without (b) would route the chain to several partitions and lose
-    reachability."""
+    without (b) would read one document's run and lose the chain
+    through the other prefixes."""
     decisions, shipped, doubling = _closure_runs(
         spark, FALLBACK_GRAPHS[name], monkeypatch
     )
-    assert [d.local for d in decisions[:2]] == [False, False]
-    assert not any(d.positional for d in decisions[:2])
+    assert [d.positional for d in decisions[:2]] == [False, False]
     if name != "iri_cells":  # DESCRIBE never follows IRI cells
-        assert decisions[2].local is False
+        assert decisions[2].positional is False
     assert shipped == doubling
     if name == "cross_prefix":
         assert ("urn:c:a", "_:l.0") in shipped[1]
@@ -516,18 +505,19 @@ def _graph(draw):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_property_label_local_matches_doubling(spark, monkeypatch, case):  # noqa: F811
-    """Random label-local graphs (cycles, branches, empty and one-cell
+    """Random document-local graphs (cycles, branches, empty and one-cell
     lists, IRI head cells) and random perturbed ones: the shipped
-    closure (A/B*/C seeding the walk) equals the old A/C ∪ A/B+/C form
-    through the doubling loop, and the check decides as the
-    construction says."""
+    closure (A/B*/C seeding the closure) equals the old A/C ∪ A/B+/C
+    form through the doubling loop, and no perturbed graph passes the
+    positional check."""
     kind, rows = case
     decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
-    assert [d.local for d in decisions[:2]] == [kind in ("local", "iri_head")] * 2
+    if kind not in ("local", "iri_head"):
+        assert not any(d.positional for d in decisions[:2])
     assert shipped == doubling
 
 
-# --- positional tier vs the walk and the doubling fallback ------------------
+# --- positional closure vs the doubling fallback -----------------------------
 
 
 def _roots_sql(rows) -> str:
@@ -573,7 +563,7 @@ POSITIONAL_GRAPH = (
 )
 def test_property_positional_matches_doubling(spark, monkeypatch, rows):  # noqa: F811
     """Every closure over a graph of positional list labels takes the
-    positional tier, and its ``A/B*/C``, ``A/B+`` and DESCRIBE results
+    positional closure, and its ``A/B*/C``, ``A/B+`` and DESCRIBE results
     equal the doubling loop's and DuckDB's."""
     from jsonld_ex_spark.operators.bgp import bgp_describe_oracle_sql
 
@@ -595,14 +585,14 @@ UNPOSITIONAL_GRAPHS = {
 
 
 @pytest.mark.parametrize("name", sorted(UNPOSITIONAL_GRAPHS))
-def test_label_local_unpositional_graphs_take_the_walk(spark, monkeypatch, name):  # noqa: F811
-    """Label-local graphs whose labels or edges break the positional
+def test_unpositional_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # noqa: F811
+    """Document-local graphs whose labels or edges break the positional
     proof (a non-canonical label, a skip, a branch, a back edge, a
-    position past 18 digits) leave the positional tier for the walk,
-    and still equal the doubling loop and DuckDB."""
+    position past 18 digits) take the doubling loop, and the seeded
+    form still equals the unseeded one and DuckDB."""
     rows = UNPOSITIONAL_GRAPHS[name]
     decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
-    assert [(d.local, d.positional) for d in decisions] == [(True, False)] * 3
+    assert [d.positional for d in decisions] == [False] * 3
     assert shipped == doubling
     for path, got in zip(LIST_PATHS, shipped):
         assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
@@ -623,8 +613,8 @@ def test_duplicate_triples_keep_set_semantics(spark, graph):  # noqa: F811
     and unions inside a path no longer deduplicate: over a table that
     holds every triple three times, each path and DESCRIBE equals the
     result over the deduplicated table and the DuckDB oracle, on the
-    positional closure, the label-local walk and the ``_:b0`` doubling
-    fallback."""
+    positional closure and on the doubling fallback, over document-local
+    labels and over ``_:b0`` labels."""
     from jsonld_ex_spark.operators.bgp import bgp_describe, bgp_describe_oracle_sql
 
     rows = {
@@ -667,8 +657,9 @@ def test_describe_walks_duplicate_roots_once(spark, monkeypatch):  # noqa: F811
     """DESCRIBE given a roots DataFrame that binds each root several
     times (the bag output of bgp_select): the reach holds every (root,
     node) pair once, although the hub's blank-node objects reach the
-    same nodes and each root arrives several times, and DESCRIBE
-    equals DuckDB."""
+    same nodes and each root arrives several times (the hub's labels
+    are not positional, so this is the doubling fallback's star), and
+    DESCRIBE equals DuckDB."""
     from jsonld_ex_spark.operators import property_paths
     from jsonld_ex_spark.operators.bgp import bgp_describe, bgp_describe_oracle_sql
 
