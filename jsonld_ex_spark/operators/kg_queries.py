@@ -1450,9 +1450,9 @@ def kg_describe_convs(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels keep every blank node inside its conversation and number
     the list cells by position, so the closure takes the positional
     path (property_paths._seeded_closure): each sampled conversation's
-    spine is read off its cell labels in Catalyst, not walked in Python
-    or by O(log list-length) doubling supersteps over the whole graph's
-    blank-node edges.  The roots need no dedup:
+    spine is read off its cell labels in Catalyst, not by O(log
+    list-length) doubling supersteps over the whole graph's blank-node
+    edges.  The roots need no dedup:
     bgp_describe's output is a set.  The DuckDB oracle recomputes the
     same CBD with a WITH RECURSIVE bnode walk."""
     from jsonld_ex_spark.operators.bgp import bgp_describe

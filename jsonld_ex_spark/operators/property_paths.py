@@ -47,10 +47,10 @@ inside a sequence seeds it with the prefix's pairs directly; a
 (``_:b0``-style N-Quads labels, IRI-celled lists, cross-document blank
 nodes, branches, cycles, ``jsonld_ops``' node-map labels) the seeded
 closure falls back to PATH DOUBLING, as does every standalone closure:
-R ∪ R∘R per superstep, all-pairs reachability over the path's edge set in ceil(log2
-diameter) supersteps, NOT one-hop-per-round, with per-round set-dedup
-as the map-side-combinable aggregate and a count-fixpoint stop, so
-cyclic graphs terminate (the rdf:list pointer-doubling walker would
+R ∪ R∘R per superstep, all-pairs reachability over the path's edge set
+in ceil(log2 diameter) supersteps, NOT one-hop-per-round, with
+per-round set-dedup as the map-side-combinable aggregate and a
+count-fixpoint stop, so cyclic graphs terminate (the rdf:list pointer-doubling walker would
 raise on a cycle; reachability is well-defined on one).  Like
 graph_paths, the whole evaluation materializes under
 ``capped_shuffle_width``: closure inputs (one predicate's edge set)

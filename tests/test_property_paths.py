@@ -450,22 +450,31 @@ FALLBACK_GRAPHS = {
     "unprefixed_cycle": _conv("a", ["_:b0", "_:b1", "_:b2"], extra=[(2, 0)]),
     # IRI cells: the rest edges have IRI subjects AND IRI objects
     "iri_cells": _conv("a", ["urn:cell:0", "urn:cell:1"]) + _conv("b", _bn("b", 2)),
+    # document-local labels that break (a) or (b): a non-canonical
+    # label, a skip, a branch, a back edge, a position past 18 digits
+    "leading_zero": _conv("p", ["_:p.01"]) + _conv("q", _bn("q", 2)),
+    "skip": _conv("p", ["_:p.0", "_:p.2", "_:p.3"]),
+    "branch": _conv("p", _bn("p", 3), extra=[(0, 2)]),
+    "back_edge": _conv("p", _bn("p", 3), extra=[(2, 0)]),
+    "19_digits": _conv("p", [f"_:p.{10**18 - 1}", f"_:p.{10**18}"]),
 }
 
 
 @pytest.mark.parametrize("name", sorted(FALLBACK_GRAPHS))
 def test_non_local_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # noqa: F811
     """A graph that breaks any of the three checks must take the
-    doubling loop; the cross-prefix case is built so that a check
-    without (b) would read one document's run and lose the chain
-    through the other prefixes."""
-    decisions, shipped, doubling = _closure_runs(
-        spark, FALLBACK_GRAPHS[name], monkeypatch
-    )
+    doubling loop, and the seeded form still equals the unseeded one
+    and DuckDB; the cross-prefix case is built so that a check without
+    (b) would read one document's run and lose the chain through the
+    other prefixes."""
+    rows = FALLBACK_GRAPHS[name]
+    decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
     assert [d.positional for d in decisions[:2]] == [False, False]
     if name != "iri_cells":  # DESCRIBE never follows IRI cells
         assert decisions[2].positional is False
     assert shipped == doubling
+    for path, got in zip(LIST_PATHS, shipped):
+        assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
     if name == "cross_prefix":
         assert ("urn:c:a", "_:l.0") in shipped[1]
 
@@ -573,29 +582,6 @@ def test_property_positional_matches_doubling(spark, monkeypatch, rows):  # noqa
     for path, got in zip(LIST_PATHS, shipped):
         assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
     assert sorted(shipped[2]) == _duck(bgp_describe_oracle_sql(_cte(rows), _roots_sql(rows)))
-
-
-UNPOSITIONAL_GRAPHS = {
-    "leading_zero": _conv("p", ["_:p.01"]) + _conv("q", _bn("q", 2)),
-    "skip": _conv("p", ["_:p.0", "_:p.2", "_:p.3"]),
-    "branch": _conv("p", _bn("p", 3), extra=[(0, 2)]),
-    "back_edge": _conv("p", _bn("p", 3), extra=[(2, 0)]),
-    "19_digits": _conv("p", [f"_:p.{10**18 - 1}", f"_:p.{10**18}"]),
-}
-
-
-@pytest.mark.parametrize("name", sorted(UNPOSITIONAL_GRAPHS))
-def test_unpositional_graphs_fall_back_to_doubling(spark, monkeypatch, name):  # noqa: F811
-    """Document-local graphs whose labels or edges break the positional
-    proof (a non-canonical label, a skip, a branch, a back edge, a
-    position past 18 digits) take the doubling loop, and the seeded
-    form still equals the unseeded one and DuckDB."""
-    rows = UNPOSITIONAL_GRAPHS[name]
-    decisions, shipped, doubling = _closure_runs(spark, rows, monkeypatch)
-    assert [d.positional for d in decisions] == [False] * 3
-    assert shipped == doubling
-    for path, got in zip(LIST_PATHS, shipped):
-        assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
 
 
 DUP_PATHS = [
