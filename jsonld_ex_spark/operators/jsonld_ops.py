@@ -7,6 +7,11 @@ pipeline in operators/kg_pipeline.py.
 Shape (the 100 TB rules all apply):
 * each operator is ONE fused Arrow-batched ``mapInPandas`` stage — no
   shuffle is introduced; partitioning of the input is preserved;
+* a reused worker's tasks start without re-reading every zip archive's
+  directory: unpickling an operator imports this package, which
+  installs ``worker_imports.keep_zip_directories``.  The first task of
+  each forked worker and the first Python stage of a session (about
+  4 s on 4 cores) still pay their full set-up;
 * per-executor processed-context LRU keyed by the context's JSON —
   shared ``@context`` values (the common case: one vocabulary across
   billions of docs) are processed once per executor, not per document;
