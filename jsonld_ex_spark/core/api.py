@@ -18,6 +18,7 @@ from jsonld_ex_spark.core.context import (
 )
 from jsonld_ex_spark.core.errors import JsonLdError
 from jsonld_ex_spark.core.expansion import expand as _expand_algo
+from jsonld_ex_spark.core.expansion import expanded_array
 from jsonld_ex_spark.core.flattening import (
     BlankNodeGenerator,
     flatten_node_map,
@@ -77,12 +78,7 @@ def expand(input_doc: Any, options: Options | None = None) -> list:
         # HTML <base href> overrides the document/option base
         active.base_iri = base_override
         active.original_base_url = base_override
-    expanded = _expand_algo(active, None, doc, options, base_url=document_url)
-    if isinstance(expanded, dict) and set(expanded.keys()) == {"@graph"}:
-        expanded = expanded["@graph"]
-    if expanded is None:
-        return []
-    return expanded if isinstance(expanded, list) else [expanded]
+    return expanded_array(_expand_algo(active, None, doc, options, base_url=document_url))
 
 
 def flatten(input_doc: Any, ctx: Any = None, options: Options | None = None) -> Any:
@@ -90,13 +86,18 @@ def flatten(input_doc: Any, ctx: Any = None, options: Options | None = None) -> 
 
     HTML inputs: extractAllScripts keeps the first-script default."""
     options = options or Options()
-    expanded = expand(input_doc, options)
-    nm = _node_map(expanded, BlankNodeGenerator())
-    flattened = flatten_node_map(nm, ordered=options.ordered)
+    return flatten_expanded(expand(input_doc, options), ctx, options, None)
+
+
+def flatten_expanded(expanded: list, ctx: Any, options: Options, active: Context | None) -> Any:
+    """Flatten an already-expanded document, then compact it against
+    ``ctx`` when one is given.  ``active``: ``ctx`` already processed
+    (or None to process it here), as for ``compact_expanded``."""
+    flattened = flatten_node_map(_node_map(expanded, BlankNodeGenerator()), ordered=options.ordered)
     if ctx is not None:
         from jsonld_ex_spark.core.compaction import compact_expanded
 
-        return compact_expanded(flattened, ctx, options, force_graph=True)
+        return compact_expanded(flattened, ctx, options, force_graph=True, active=active)
     return flattened
 
 

@@ -189,6 +189,17 @@ def expand(
     return result
 
 
+def expanded_array(result: Any) -> list:
+    """The expand API's last step over the algorithm's result (spec
+    §9.1 step 8): an only-``@graph`` map unwraps, null becomes ``[]``
+    and a single object becomes a one-item array."""
+    if isinstance(result, dict) and set(result.keys()) == {"@graph"}:
+        result = result["@graph"]
+    if result is None:
+        return []
+    return result if isinstance(result, list) else [result]
+
+
 def _expand_element(
     active: Context,
     type_scoped: Context,

@@ -35,18 +35,15 @@ from jsonld_ex_spark.core.rdf import (
     XSD_INTEGER,
     XSD_STRING,
     canonical_double,
+    term_str,
 )
 
 RDF_LIST = RDF_NS + "List"
 
 
-def _term_id(t: tuple) -> str:
-    return t[1] if t[0] == "iri" else "_:" + t[1]
-
-
 def _rdf_to_object(o: tuple, options: Options) -> dict:
     if o[0] in ("iri", "bnode"):
-        return {"@id": _term_id(o)}
+        return {"@id": term_str(o)}
     _, lexical, datatype, language = o
     result: dict[str, Any] = {}
     if options.use_native_types and language is None:
@@ -122,25 +119,25 @@ def from_rdf(quads: list, options: Options | None = None) -> list:
     compound_subjects: dict[str, set] = {}
 
     for s, p, o, g in quads:
-        name = _term_id(g) if g is not None else "@default"
+        name = term_str(g) if g is not None else "@default"
         node_map = graph_map.setdefault(name, {})
         compound = compound_subjects.setdefault(name, set())
         if name != "@default":
             default_graph.setdefault(name, {"@id": name})
-        subj = _term_id(s)
-        pred = _term_id(p)
+        subj = term_str(s)
+        pred = term_str(p)
         node = node_map.setdefault(subj, {"@id": subj})
 
         if options.rdf_direction == "compound-literal" and pred == RDF_DIRECTION:
             compound.add(subj)
 
         if o[0] in ("iri", "bnode"):
-            node_map.setdefault(_term_id(o), {"@id": _term_id(o)})
+            node_map.setdefault(term_str(o), {"@id": term_str(o)})
 
         if pred == RDF_TYPE and not options.use_rdf_type and o[0] in ("iri", "bnode"):
             types = node.setdefault("@type", [])
-            if _term_id(o) not in types:
-                types.append(_term_id(o))
+            if term_str(o) not in types:
+                types.append(term_str(o))
             continue
 
         value = _rdf_to_object(o, options)
@@ -149,7 +146,7 @@ def from_rdf(quads: list, options: Options | None = None) -> list:
             values.append(value)
 
         if o[0] in ("iri", "bnode"):
-            oid = _term_id(o)
+            oid = term_str(o)
             usage = {"node": node, "property": pred, "value": value}
             if oid == RDF_NIL:
                 nil_node = node_map.setdefault(oid, {"@id": oid})

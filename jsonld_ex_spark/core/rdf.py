@@ -52,6 +52,24 @@ def literal(lexical: str, datatype: str = XSD_STRING, language: str | None = Non
     return ("lit", lexical, datatype, language)
 
 
+def term_str(term: tuple) -> str:
+    """An IRI or blank-node term as a string: the IRI, or ``_:label``."""
+    return term[1] if term[0] == "iri" else "_:" + term[1]
+
+
+def quad_row(quad: tuple) -> tuple:
+    """One quad as a triple-table row ``(subj, pred, obj, obj_is_iri,
+    obj_dt, obj_lang, graph)``: node terms via ``term_str``, literals
+    split into lexical form, datatype and language; ``graph`` is None
+    for the default graph."""
+    s, p, o, g = quad
+    if o[0] == "lit":
+        obj, is_iri, dt, lang = o[1], False, o[2], o[3]
+    else:
+        obj, is_iri, dt, lang = term_str(o), True, None, None
+    return (term_str(s), p[1], obj, is_iri, dt, lang, None if g is None else term_str(g))
+
+
 def canonical_double(value: float) -> str:
     """XSD canonical double from the shortest round-trip decimal form."""
     if math.isnan(value):

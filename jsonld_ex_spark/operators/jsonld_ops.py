@@ -12,13 +12,20 @@ Shape (the 100 TB rules all apply):
   installs ``worker_imports.keep_zip_directories``.  The first task of
   each forked worker and the first Python stage of a session (about
   4 s on 4 cores) still pay their full set-up;
-* per-executor processed-context LRU keyed by the context's JSON —
-  shared ``@context`` values (the common case: one vocabulary across
-  billions of docs) are processed once per executor, not per document;
-* per-document quarantine: a document that raises a spec error yields
-  an error column (or marker triple) instead of killing the job — the
-  reference raises JSON.LD.Error and aborts, which is correct for one
-  document and wrong for a corpus.
+* every operator expands a document through one kernel,
+  ``_expand_doc``, which equals ``core.api.expand`` in result and
+  error code.  Its per-executor processed-context LRU,
+  ``_processed_context``, holds every context the operators apply: the
+  shared ones (expansion base, compaction context, frame context) and
+  each document's top-level inline ``@context`` on top of its base.  A
+  vocabulary shared across billions of documents is processed once
+  per executor, not per document;
+* per-document quarantine, one rule for every operator: a document
+  that raises a spec error, is not JSON, or has a shape the algorithms
+  reject structurally yields an error column (or marker triple) coded
+  by ``_error_code`` instead of killing the job — the reference raises
+  JSON.LD.Error and aborts, which is correct for one document and
+  wrong for a corpus.
 
 Remote contexts: resolve them driver-side with
 ``sources.document_loader.http_document_loader`` and inline/pre-process
@@ -35,11 +42,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from jsonld_ex_spark.core.api import expand as _expand
-from jsonld_ex_spark.core.api import flatten as _flatten
+from jsonld_ex_spark.core.api import flatten_expanded
 from jsonld_ex_spark.core.context import Context, Options, process_context
 from jsonld_ex_spark.core.errors import JsonLdError
 from jsonld_ex_spark.core.expansion import expand as expand_algo
+from jsonld_ex_spark.core.expansion import expanded_array
 from jsonld_ex_spark.core.flattening import BlankNodeGenerator, node_map
+from jsonld_ex_spark.core.rdf import quad_row
 from jsonld_ex_spark.core.to_rdf import to_rdf_from_node_map
 
 QUARANTINE_PRED = "https://sparkld.dev/system#processingError"
@@ -48,12 +57,60 @@ QUARANTINE_PRED = "https://sparkld.dev/system#processingError"
 # a corpus in which every document carries its own inline context
 EXECUTOR_CACHE_SIZE = 256
 
+# what a document can raise that quarantines it: spec errors, bad JSON
+# text, and malformed-but-parseable shapes the spec algorithms reject
+# structurally (AttributeError/TypeError)
+_QUARANTINED = (JsonLdError, ValueError, AttributeError, TypeError)
+
+
+def _error_code(e: Exception) -> str:
+    """The quarantine code of one of the ``_QUARANTINED`` errors."""
+    if isinstance(e, JsonLdError):
+        return e.code
+    if isinstance(e, ValueError):
+        return f"invalid JSON: {e}"
+    return f"invalid document: {e}"
+
 
 @functools.lru_cache(maxsize=EXECUTOR_CACHE_SIZE)
-def _processed_context(ctx_json: str) -> Context:
-    """Per-executor processed-context memo (keyed by the raw JSON); a
-    context that fails to process raises and is not cached."""
-    return process_context(Context(), json.loads(ctx_json), Options())
+def _processed_context(*ctx_jsons: str) -> Context:
+    """Per-executor processed-context memo, keyed by the contexts' raw
+    JSON in the order they apply: the last one is processed on top of
+    the (memoized) result of the ones before it, the first on top of an
+    empty context.  A context that fails to process raises and is not
+    cached."""
+    active = _processed_context(*ctx_jsons[:-1]) if len(ctx_jsons) > 1 else Context()
+    return process_context(active, json.loads(ctx_jsons[-1]), Options())
+
+
+def _context_json(ctx) -> str:
+    """A context's JSON, an ``{"@context": …}`` wrapper unwrapped as the
+    core API unwraps it."""
+    if isinstance(ctx, dict) and "@context" in ctx:
+        ctx = ctx["@context"]
+    return json.dumps(ctx)
+
+
+def _expand_doc(doc, *base: str) -> list:
+    """Expand one parsed document — the only place the column operators
+    expand one.  Equals ``core.api.expand(doc, Options(expand_context=
+    ctx))`` in result and in error code, where ``base`` is empty or holds
+    the shared context's JSON; unlike the API, a string document is data
+    (it expands to nothing), never a URL.
+
+    The top-level inline ``@context`` comes from the LRU, processed on
+    top of the base.  Expanding the rest with ``from_map=True`` skips
+    spec step 7 at the top node: the inline context is step 9, so step 7
+    must not revert an inline ``@propagate: false`` there.  A base that
+    does not propagate itself (it carries a ``previous_context``) is
+    reverted by step 7 before step 9 runs; the document then expands
+    whole."""
+    active = _processed_context(*base) if base else Context()
+    if isinstance(doc, dict) and "@context" in doc and active.previous_context is None:
+        active = _processed_context(*base, json.dumps(doc["@context"]))
+        body = {k: v for k, v in doc.items() if k != "@context"}
+        return expanded_array(expand_algo(active, None, body, Options(), from_map=True))
+    return expanded_array(expand_algo(active, None, doc, Options()))
 
 
 def _doc_op_column(df: DataFrame, json_col: str, out_col: str, fn) -> DataFrame:
@@ -72,12 +129,9 @@ def _doc_op_column(df: DataFrame, json_col: str, out_col: str, fn) -> DataFrame:
                 try:
                     outs.append(json.dumps(fn(json.loads(raw))))
                     errs.append(None)
-                except JsonLdError as e:
+                except _QUARANTINED as e:
                     outs.append(None)
-                    errs.append(e.code)
-                except ValueError as e:  # bad JSON text
-                    outs.append(None)
-                    errs.append(f"invalid JSON: {e}")
+                    errs.append(_error_code(e))
             out = pdf[passthrough + [json_col]].copy()
             out[out_col] = outs
             out["jsonld_error"] = errs
@@ -96,38 +150,23 @@ def expand_column(
 
     ``context``: a SHARED context (the expandContext option) applied to
     EVERY document as the base active context — documents with an inline
-    ``@context`` layer it on top inside the expansion algorithm, exactly
-    like the reference's expand_context handling (lib/json_ld.ex);
-    processed once per executor via the context cache, not per document."""
-    if context is None:
-        return _doc_op_column(df, json_col, out_col, lambda d: _expand(d, Options()))
-
-    # mirror api._initial_context: an {"@context": ...} wrapper is unwrapped
-    if isinstance(context, dict) and "@context" in context:
-        context = context["@context"]
-    ctx_json = json.dumps(context, sort_keys=True)
-
-    def fn(d):
-        active = _processed_context(ctx_json)
-        result = expand_algo(active, None, d, Options())
-        if isinstance(result, dict) and set(result.keys()) == {"@graph"}:
-            result = result["@graph"]
-        if result is None:
-            return []
-        return result if isinstance(result, list) else [result]
-
-    return _doc_op_column(df, json_col, out_col, fn)
+    ``@context`` layer it on top, exactly like the reference's
+    expand_context handling (lib/json_ld.ex); both are processed once
+    per executor via the context LRU, not per document."""
+    base = (_context_json(context),) if context is not None else ()
+    return _doc_op_column(df, json_col, out_col, lambda d: _expand_doc(d, *base))
 
 
 def flatten_column(
     df: DataFrame, json_col: str = "doc", out_col: str = "flattened", context: dict | None = None
 ) -> DataFrame:
-    """Distributed JSON.LD.flatten (optional compaction context)."""
-    ctx_json = json.dumps(context) if context is not None else None
+    """Distributed JSON.LD.flatten (optional compaction context, processed
+    once per executor like ``compact_column``'s)."""
+    ctx_json = _context_json(context) if context is not None else None
 
     def fn(d):
-        ctx = json.loads(ctx_json) if ctx_json is not None else None
-        return _flatten(d, ctx, Options())
+        active = _processed_context(ctx_json) if ctx_json is not None else None
+        return flatten_expanded(_expand_doc(d), context, Options(), active)
 
     return _doc_op_column(df, json_col, out_col, fn)
 
@@ -141,14 +180,11 @@ def compact_column(
     every document in the partition — not rebuilt per document."""
     from jsonld_ex_spark.core.compaction import compact_expanded
 
-    ctx_json = json.dumps(context, sort_keys=True)
-    ctx_verbatim = json.dumps(context)
+    ctx_json = _context_json(context)
 
     def fn(d):
-        options = Options()
         active = _processed_context(ctx_json)
-        expanded = _expand(d, options)
-        return compact_expanded(expanded, json.loads(ctx_verbatim), options, active=active)
+        return compact_expanded(_expand_doc(d), context, Options(), active=active)
 
     return _doc_op_column(df, json_col, out_col, fn)
 
@@ -164,14 +200,15 @@ def frame_column(
     from jsonld_ex_spark.core.framing import frame_expanded
 
     frame_json = json.dumps(frame_doc)
-    ctx_json = json.dumps(frame_doc.get("@context")) if isinstance(frame_doc, dict) else "null"
+    ctx = frame_doc.get("@context") if isinstance(frame_doc, dict) else None
 
     def fn(d):
-        # frame expanded once per executor (module memo); document
-        # expansion still honors any per-document inline @context
-        ef = _expanded_frame(frame_json)
-        expanded = _expand(d, Options())
-        return frame_expanded(expanded, ef, json.loads(ctx_json), Options())
+        # the frame and its context are processed once per executor
+        # (LRUs); document expansion honors any inline @context
+        return frame_expanded(
+            _expand_doc(d), _expanded_frame(frame_json), ctx, Options(),
+            compact_active=_processed_context(json.dumps(ctx)),
+        )
 
     return _doc_op_column(df, json_col, out_col, fn)
 
@@ -179,13 +216,9 @@ def frame_column(
 @functools.lru_cache(maxsize=EXECUTOR_CACHE_SIZE)
 def _expanded_frame(frame_json: str) -> list:
     """Per-executor expanded-frame memo (keyed by the frame's JSON)."""
-    return _expand_frame_doc(json.loads(frame_json))
-
-
-def _expand_frame_doc(frame_doc: dict) -> list:
     import dataclasses
 
-    return _expand(frame_doc, dataclasses.replace(Options(), frame_expansion=True))
+    return _expand(json.loads(frame_json), dataclasses.replace(Options(), frame_expansion=True))
 
 
 TRIPLE_OUT_SCHEMA = (
@@ -198,8 +231,8 @@ def to_rdf_rows(df: DataFrame, json_col: str = "doc", doc_id_col: str = "doc_id"
     """Distributed JSON.LD.to_rdf: JSON-LD document column → exploded
     triple rows, deterministic per-document skolem blank-node labels
     (re-runs and retries produce identical output).  Failed documents
-    quarantine as one marker triple (pred=QUARANTINE_PRED, obj=spec
-    error code)."""
+    quarantine as one marker triple (pred=QUARANTINE_PRED, obj=the
+    ``_error_code``)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         options = Options()
@@ -209,51 +242,12 @@ def to_rdf_rows(df: DataFrame, json_col: str = "doc", doc_id_col: str = "doc_id"
             for doc_id, raw in zip(pdf[doc_id_col], pdf[json_col]):
                 doc_id = int(doc_id)
                 try:
-                    doc = json.loads(raw)
-                    if isinstance(doc, dict):
-                        ctx = doc.get("@context")
-                        active = (
-                            _processed_context(json.dumps(ctx, sort_keys=True))
-                            if ctx is not None
-                            else Context()
-                        )
-                        body = {k: v for k, v in doc.items() if k != "@context"}
-                    else:
-                        # valid top-level JSON-LD may be an array (expand
-                        # each item; inline contexts handled inside the
-                        # algorithm) or a scalar/null (expands to nothing)
-                        active, body = Context(), doc
-                    expanded = expand_algo(active, None, body, options)
-                    if isinstance(expanded, dict) and set(expanded.keys()) == {"@graph"}:
-                        expanded = expanded["@graph"]
-                    if expanded is None:
-                        expanded = []
-                    elif not isinstance(expanded, list):
-                        expanded = [expanded]
                     generator = BlankNodeGenerator(skolem_prefix=f"{doc_id}.")
-                    nm = node_map(expanded, generator)
+                    nm = node_map(_expand_doc(json.loads(raw)), generator)
                     quads = to_rdf_from_node_map(nm, options, generator)
-                    for s, p, o, g in quads:
-                        subj = s[1] if s[0] == "iri" else "_:" + s[1]
-                        if o[0] == "lit":
-                            obj, is_iri, dt, lang = o[1], False, o[2], o[3]
-                        else:
-                            obj = o[1] if o[0] == "iri" else "_:" + o[1]
-                            is_iri, dt, lang = True, None, None
-                        graph = (g[1] if g[0] == "iri" else "_:" + g[1]) if g is not None else None
-                        out.append((doc_id, subj, p[1], obj, is_iri, dt, lang, graph))
-                except (JsonLdError, ValueError, AttributeError, TypeError) as e:
-                    # AttributeError/TypeError: malformed-but-parseable JSON
-                    # shapes the spec algorithms reject structurally — the
-                    # per-document quarantine contract still holds (one
-                    # marker triple, never a job kill)
-                    if isinstance(e, JsonLdError):
-                        code = e.code
-                    elif isinstance(e, ValueError):
-                        code = f"invalid JSON: {e}"
-                    else:
-                        code = f"invalid document: {e}"
-                    out.append((doc_id, f"urn:doc:{doc_id}", QUARANTINE_PRED, code,
+                    out.extend((doc_id, *quad_row(q)) for q in quads)
+                except _QUARANTINED as e:
+                    out.append((doc_id, f"urn:doc:{doc_id}", QUARANTINE_PRED, _error_code(e),
                                 False, None, None, None))
             yield pd.DataFrame(out, columns=cols)
 
@@ -291,8 +285,10 @@ def from_rdf_rows(triples: DataFrame, doc_id_col: str = "doc_id") -> DataFrame:
             return pd.DataFrame(
                 {"doc_id": [doc_id], "doc": [json.dumps(docs)], "jsonld_error": [None]}
             )
-        except JsonLdError as e:
-            return pd.DataFrame({"doc_id": [doc_id], "doc": [None], "jsonld_error": [e.code]})
+        except _QUARANTINED as e:
+            return pd.DataFrame(
+                {"doc_id": [doc_id], "doc": [None], "jsonld_error": [_error_code(e)]}
+            )
 
     return triples.groupBy(doc_id_col).applyInPandas(
         rebuild, schema="doc_id long, doc string, jsonld_error string"
@@ -317,33 +313,43 @@ _DOC_CTX = {
 }
 
 
-def jsonld_doc_triples(spark, sf_dir: str) -> DataFrame:
+def _gated_docs(spark, sf_dir: str, ctx: dict, *fields) -> DataFrame:
+    """``(doc_id, doc)`` over the gate's documents table, one JSON-LD
+    document per row: ``{"@context": ctx, <fields>}``.  ``fields`` are
+    named columns over ``documents``; to_json builds (and escapes) the
+    data part and the shared context is spliced in as a constant
+    prefix."""
     from pyspark.sql import functions as F
+
+    from jsonld_ex_spark.functions.partitioning import spread_input
 
     # spread the single-split test file before the per-document Python
     # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
     d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps(_DOC_CTX)
-    # assemble {"@context":..., "@id":"<ns><id>", "name":..., "chars":...}
-    # — to_json builds (and escapes) the data part; the shared context is
-    # spliced in as a constant prefix.
-    docs = d.select(
+    return d.select(
         "doc_id",
         F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', '),
-            F.regexp_replace(
-                F.to_json(
-                    F.struct(
-                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                        F.col("text").alias("name"),
-                        F.col("n_chars").cast("long").alias("chars"),
-                    )
-                ),
-                r"^\{", "",
-            ),
+            F.lit('{"@context": ' + json.dumps(ctx) + ", "),
+            F.regexp_replace(F.to_json(F.struct(*fields)), r"^\{", ""),
         ).alias("doc"),
+    )
+
+
+def _doc_iri():
+    """The ``@id`` column of a gated document: ``DOC_NS`` + doc_id."""
+    from pyspark.sql import functions as F
+
+    return F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id")
+
+
+def jsonld_doc_triples(spark, sf_dir: str) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    docs = _gated_docs(
+        spark, sf_dir, _DOC_CTX,
+        _doc_iri(),
+        F.col("text").alias("name"),
+        F.col("n_chars").cast("long").alias("chars"),
     )
     triples = to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id")
     return triples.select("doc_id", "subj", "pred", "obj", "obj_dt")
@@ -373,38 +379,18 @@ def jsonld_frame_select(spark, sf_dir: str) -> DataFrame:
     for this document shape)."""
     from pyspark.sql import functions as F
 
-    # spread the single-split test file before the per-document Python
-    # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps({"@vocab": VOCAB})
-    docs = d.select(
-        "doc_id",
-        F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', '),
-            F.regexp_replace(
-                F.to_json(
-                    F.struct(
-                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                        F.when(F.col("n_chars") > FRAME_CHARS_THRESHOLD, F.lit("Long"))
-                        .otherwise(F.lit("Short"))
-                        .alias("@type"),
-                        F.col("text").alias("name"),
-                        F.col("n_chars").cast("long").alias("chars"),
-                        F.struct(
-                            F.concat(
-                                F.lit(AUTH_NS), (F.col("doc_id") % 10).cast("string")
-                            ).alias("@id"),
-                            F.concat(
-                                F.lit("author "), (F.col("doc_id") % 10).cast("string")
-                            ).alias("name"),
-                        ).alias("author"),
-                    )
-                ),
-                r"^\{", "",
-            ),
-        ).alias("doc"),
+    docs = _gated_docs(
+        spark, sf_dir, {"@vocab": VOCAB},
+        _doc_iri(),
+        F.when(F.col("n_chars") > FRAME_CHARS_THRESHOLD, F.lit("Long"))
+        .otherwise(F.lit("Short"))
+        .alias("@type"),
+        F.col("text").alias("name"),
+        F.col("n_chars").cast("long").alias("chars"),
+        F.struct(
+            F.concat(F.lit(AUTH_NS), (F.col("doc_id") % 10).cast("string")).alias("@id"),
+            F.concat(F.lit("author "), (F.col("doc_id") % 10).cast("string")).alias("name"),
+        ).alias("author"),
     )
     frame_json = json.dumps(_SELECT_FRAME)
 
@@ -414,14 +400,14 @@ def jsonld_frame_select(spark, sf_dir: str) -> DataFrame:
         # one-time per task: expanded frame + processed compaction
         # context (per-executor memos) — no per-document reprocessing
         ef = _expanded_frame(frame_json)
-        fctx = json.loads(frame_json)["@context"]
-        compact_active = _processed_context(json.dumps(fctx, sort_keys=True))
+        fctx = _SELECT_FRAME["@context"]
+        compact_active = _processed_context(json.dumps(fctx))
         options = Options()
         for pdf in batches:
             out: list[tuple] = []
             for doc_id, raw in zip(pdf["doc_id"], pdf["doc"]):
                 framed = frame_expanded(
-                    _expand(json.loads(raw), options), ef, fctx, options,
+                    _expand_doc(json.loads(raw)), ef, fctx, options,
                     compact_active=compact_active,
                 )
                 if "chars" not in framed:
@@ -459,46 +445,24 @@ def jsonld_canonical_hashes(spark, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from jsonld_ex_spark.core.canonicalization import canonical_nquads
-    from jsonld_ex_spark.core.to_rdf import to_rdf_from_node_map
 
-    # spread the single-split test file before the per-document Python
-    # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps({"@vocab": VOCAB})
-    docs = d.select(
-        "doc_id",
-        F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', '),
-            F.regexp_replace(
-                F.to_json(
-                    F.struct(
-                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                        F.md5("text").alias("name"),
-                        F.struct(
-                            F.concat(
-                                F.lit("author "), (F.col("doc_id") % 10).cast("string")
-                            ).alias("name"),
-                        ).alias("author"),
-                    )
-                ),
-                r"^\{", "",
-            ),
-        ).alias("doc"),
+    docs = _gated_docs(
+        spark, sf_dir, {"@vocab": VOCAB},
+        _doc_iri(),
+        F.md5("text").alias("name"),
+        F.struct(
+            F.concat(F.lit("author "), (F.col("doc_id") % 10).cast("string")).alias("name"),
+        ).alias("author"),
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
         options = Options()
-        active = _processed_context(json.dumps({"@vocab": VOCAB}, sort_keys=True))
         for pdf in batches:
             ids, hashes, counts, invariant = [], [], [], []
             for doc_id, raw in zip(pdf["doc_id"], pdf["doc"]):
-                doc = json.loads(raw)
-                body = {k: v for k, v in doc.items() if k != "@context"}
-                expanded = expand_algo(active, None, body, options)
+                expanded = _expand_doc(json.loads(raw))
                 canons = []
                 for prefix in ("A.", "B."):
                     generator = BlankNodeGenerator(skolem_prefix=prefix)
@@ -535,28 +499,19 @@ def _named_graph_triples(spark, sf_dir: str) -> DataFrame:
     of re-running the Python stage."""
     from pyspark.sql import functions as F
 
-    from jsonld_ex_spark.functions.partitioning import session_memo, spread_input
+    from jsonld_ex_spark.functions.partitioning import session_memo
 
     def build() -> DataFrame:
-        # spread the single-split test file before the per-document Python
-        # kernel (partitioning.spread_input: no-op on a properly-split table)
-        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-        ctx_lit = json.dumps(_DOC_CTX)
-        docs = d.select(
-            "doc_id",
-            F.concat(
-                F.lit('{"@context": ' + ctx_lit + ', "@id": "' + GRAPH_NS),
-                (F.col("doc_id") % 10).cast("string"),
-                F.lit('", "@graph": ['),
-                F.to_json(
-                    F.struct(
-                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                        F.col("text").alias("name"),
-                        F.col("n_chars").cast("long").alias("chars"),
-                    )
-                ),
-                F.lit("]}"),
-            ).alias("doc"),
+        docs = _gated_docs(
+            spark, sf_dir, _DOC_CTX,
+            F.concat(F.lit(GRAPH_NS), (F.col("doc_id") % 10).cast("string")).alias("@id"),
+            F.array(
+                F.struct(
+                    _doc_iri(),
+                    F.col("text").alias("name"),
+                    F.col("n_chars").cast("long").alias("chars"),
+                )
+            ).alias("@graph"),
         )
         return to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
             "doc_id"
@@ -682,38 +637,19 @@ def _lang_doc_triples(spark, sf_dir: str) -> DataFrame:
     Python stage."""
     from pyspark.sql import functions as F
 
-    from jsonld_ex_spark.functions.partitioning import session_memo, spread_input
+    from jsonld_ex_spark.functions.partitioning import session_memo
 
     def build() -> DataFrame:
-        # spread the single-split test file before the per-document Python
-        # kernel (partitioning.spread_input: no-op on a properly-split table)
-        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-        ctx_lit = json.dumps(_LANG_DOC_CTX)
         mod3 = F.col("doc_id") % 3
-        docs = d.select(
-            "doc_id",
-            F.concat(
-                F.lit('{"@context": ' + ctx_lit + ', '),
-                F.regexp_replace(
-                    F.to_json(
-                        F.struct(
-                            F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                            F.struct(
-                                F.col("text").alias("@value"),
-                                F.when(mod3 == 0, F.lit("en"))
-                                .when(mod3 == 1, F.lit("fr"))
-                                .alias("@language"),
-                            ).alias("name"),
-                            F.col("n_chars").cast("long").alias("chars"),
-                            F.when(
-                                F.col("doc_id") % 4 == 0,
-                                (F.col("doc_id") % 5).cast("string"),
-                            ).alias("rating"),
-                        )
-                    ),
-                    r"^\{", "",
-                ),
-            ).alias("doc"),
+        docs = _gated_docs(
+            spark, sf_dir, _LANG_DOC_CTX,
+            _doc_iri(),
+            F.struct(
+                F.col("text").alias("@value"),
+                F.when(mod3 == 0, F.lit("en")).when(mod3 == 1, F.lit("fr")).alias("@language"),
+            ).alias("name"),
+            F.col("n_chars").cast("long").alias("chars"),
+            F.when(F.col("doc_id") % 4 == 0, (F.col("doc_id") % 5).cast("string")).alias("rating"),
         )
         return to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
             "doc_id"

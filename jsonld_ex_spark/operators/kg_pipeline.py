@@ -54,7 +54,15 @@ from jsonld_ex_spark.core.context import Context, Options, process_context
 from jsonld_ex_spark.core.errors import JsonLdError
 from jsonld_ex_spark.core.expansion import expand as expand_algo
 from jsonld_ex_spark.core.flattening import BlankNodeGenerator, node_map
-from jsonld_ex_spark.core.rdf import RDF_FIRST, RDF_NIL, RDF_REST, RDF_TYPE, XSD_INTEGER, XSD_STRING
+from jsonld_ex_spark.core.rdf import (
+    RDF_FIRST,
+    RDF_NIL,
+    RDF_REST,
+    RDF_TYPE,
+    XSD_INTEGER,
+    XSD_STRING,
+    quad_row,
+)
 from jsonld_ex_spark.core.to_rdf import to_rdf_from_node_map
 from jsonld_ex_spark.sources.transcripts import (
     CONV_NS,
@@ -149,21 +157,13 @@ def doc_to_triple_rows(conv_id: str, doc: dict, active: Context, options: Option
     quads = to_rdf_from_node_map(nm, options, generator)
     rows = []
     lineage_memo: dict[str, int | None] = {}
-    for s, p, o, g in quads:
-        s_kind, s_val = s
-        subj = s_val if s_kind == "iri" else "_:" + s_val
-        pred = p[1]
-        if o[0] == "lit":
-            obj, obj_is_iri, obj_dt, obj_lang = o[1], False, o[2], o[3]
-        else:
-            obj = o[1] if o[0] == "iri" else "_:" + o[1]
-            obj_is_iri, obj_dt, obj_lang = True, None, None
-        graph = (g[1] if g[0] == "iri" else "_:" + g[1]) if g is not None else None
-        turn_idx = lineage_memo.get(subj, -2)
+    for quad in quads:
+        row = quad_row(quad)
+        turn_idx = lineage_memo.get(row[0], -2)
         if turn_idx == -2:
-            turn_idx = _lineage_turn_idx(conv_id, s_kind, s_val)
-            lineage_memo[subj] = turn_idx
-        rows.append((subj, pred, obj, obj_is_iri, obj_dt, obj_lang, graph, conv_id, turn_idx))
+            turn_idx = _lineage_turn_idx(conv_id, *quad[0])
+            lineage_memo[row[0]] = turn_idx
+        rows.append((*row, conv_id, turn_idx))
     return rows
 
 

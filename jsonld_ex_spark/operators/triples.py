@@ -256,19 +256,10 @@ def read_nquads(spark, path, jvm_fast_path: bool = True) -> DataFrame:
 
     def parse(batches):
         from jsonld_ex_spark.core.nquads import parse_nquads
+        from jsonld_ex_spark.core.rdf import quad_row
 
         for pdf in batches:
-            rows: list[tuple] = []
-            for line in pdf["value"]:
-                for s, p, o, g in parse_nquads(line):
-                    subj = s[1] if s[0] == "iri" else "_:" + s[1]
-                    if o[0] == "lit":
-                        obj, is_iri, dt, lang = o[1], False, o[2], o[3]
-                    else:
-                        obj = o[1] if o[0] == "iri" else "_:" + o[1]
-                        is_iri, dt, lang = True, None, None
-                    graph = (g[1] if g[0] == "iri" else "_:" + g[1]) if g is not None else None
-                    rows.append((subj, p[1], obj, is_iri, dt, lang, graph))
+            rows = [quad_row(q) for line in pdf["value"] for q in parse_nquads(line)]
             yield pd.DataFrame(rows, columns=cols)
 
     if not jvm_fast_path:

@@ -16,6 +16,7 @@ from jsonld_ex_spark.operators.jsonld_ops import (
     compact_column,
     expand_column,
     flatten_column,
+    frame_column,
     to_rdf_rows,
 )
 
@@ -31,6 +32,16 @@ DOCS = [
     {"@context": CTX, "name": "anonymous"},  # blank node subject
     {"@context": CTX, "@id": "http://ex.org/c", "knows": {"name": "nested blank"}},
 ]
+
+
+# expands, but compaction, framing and toRdf reject its expanded form
+# with a TypeError
+TYPE_MAP_DOC = {"@context": {"@vocab": "http://ex/", "a": {"@container": "@type"}}, "a": {"k": 5}}
+# a top-level context that does not propagate to nested nodes
+NO_PROPAGATE_DOC = {
+    "@context": {"@vocab": "http://ex/", "@propagate": False},
+    "@id": "http://ex.org/p", "p": "v", "n": {"@id": "http://ex.org/n", "q": 1},
+}
 
 
 def _df(spark, docs):  # noqa: F811
@@ -50,9 +61,12 @@ def test_flatten_and_compact_columns_match_core(spark):  # noqa: F811
     df = _df(spark, DOCS)
     for r, doc in zip(flatten_column(df).orderBy("doc_id").collect(), DOCS):
         assert json.loads(r["flattened"]) == flatten(doc, None, Options())
-    for r, doc in zip(compact_column(df, CTX).orderBy("doc_id").collect(), DOCS):
-        expected = compact(expand(doc, Options()), CTX, Options())
-        assert json.loads(r["compacted"]) == expected
+    # a context given as an {"@context": …} wrapper compacts like the API's
+    for ctx in (CTX, {"@context": CTX}):
+        for r, doc in zip(compact_column(df, ctx).orderBy("doc_id").collect(), DOCS):
+            expected = compact(expand(doc, Options()), ctx, Options())
+            assert r["jsonld_error"] is None
+            assert json.loads(r["compacted"]) == expected
 
 
 def test_bad_documents_quarantine_not_crash(spark):  # noqa: F811
@@ -60,17 +74,35 @@ def test_bad_documents_quarantine_not_crash(spark):  # noqa: F811
         json.dumps(DOCS[0]),
         "not json at all {{{",
         json.dumps({"@context": {"@vocab": 7}, "x": 1}),  # invalid vocab mapping
+        json.dumps(TYPE_MAP_DOC),
     ]
     df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)], "doc_id long, doc string")
     rows = expand_column(df).orderBy("doc_id").collect()
     assert rows[0]["jsonld_error"] is None
     assert rows[1]["expanded"] is None and "invalid JSON" in rows[1]["jsonld_error"]
     assert rows[2]["expanded"] is None and rows[2]["jsonld_error"] == "invalid vocab mapping"
+    assert rows[3]["jsonld_error"] is None
+    assert json.loads(rows[3]["expanded"]) == expand(TYPE_MAP_DOC, Options())
 
     trows = to_rdf_rows(df).collect()
     quarantined = {r["doc_id"]: r["obj"] for r in trows if r["pred"] == QUARANTINE_PRED}
-    assert set(quarantined) == {1, 2}
+    assert set(quarantined) == {1, 2, 3}
     assert quarantined[2] == "invalid vocab mapping"
+    assert quarantined[3].startswith("invalid document: ")
+
+    # every operator quarantines the @type-map document with the same code
+    type_map_df = df.where("doc_id = 3")
+    vocab = {"@vocab": "http://ex/"}
+    for out in [
+        compact_column(type_map_df, vocab),
+        frame_column(type_map_df, {"@context": vocab}),
+        flatten_column(type_map_df, context=vocab),
+    ]:
+        [row] = out.collect()
+        assert row["jsonld_error"] == quarantined[3]
+    [row] = flatten_column(type_map_df).collect()
+    assert row["jsonld_error"] is None
+    assert json.loads(row["flattened"]) == flatten(TYPE_MAP_DOC, None, Options())
 
 
 def test_to_rdf_rows_deterministic_skolem(spark):  # noqa: F811
@@ -120,12 +152,18 @@ def test_expand_column_shared_context(spark):  # noqa: F811
     override = {"@context": {"name": "http://other.example/name"}, "name": "D"}
     # inline context ADDS a term; the shared "name" mapping must survive
     layered = {"@context": {"nick": "http://ex.org/nick"}, "name": "E", "nick": "e"}
-    docs = bare + [override, layered]
+    docs = bare + [override, layered, NO_PROPAGATE_DOC]
     df = _df(spark, docs)
-    rows = expand_column(df, context=CTX).orderBy("doc_id").collect()
-    for r, doc in zip(rows, docs):
-        expected = expand(doc, Options(expand_context=CTX))
-        assert json.loads(r["expanded"]) == expected
+    no_propagate_base = {"@vocab": "http://base.example/", "@propagate": False}
+    for base in (no_propagate_base, CTX):
+        rows = expand_column(df, context=base).orderBy("doc_id").collect()
+        for r, doc in zip(rows, docs):
+            assert r["jsonld_error"] is None
+            expected = expand(doc, Options(expand_context=base))
+            assert json.loads(r["expanded"]) == expected
+    # under CTX: the non-propagating inline context applies at the top node
+    [top] = json.loads(rows[4]["expanded"])
+    assert "http://ex/p" in top
     # the layered doc really used BOTH vocabularies
     layered_out = json.loads(rows[3]["expanded"])[0]
     assert "http://xmlns.com/foaf/0.1/name" in layered_out
@@ -140,10 +178,14 @@ def test_to_rdf_rows_non_dict_documents(spark):  # noqa: F811
         {"@context": CTX, "@id": "http://ex.org/a", "name": "Alice"},
         {"@context": CTX, "@id": "http://ex.org/b", "name": "Bob"},
     ]
-    docs = [json.dumps(array_doc), "null", json.dumps("just a string")]
+    docs = [json.dumps(array_doc), "null", json.dumps("just a string"), "5"]
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(docs)], "doc_id long, doc string"
     )
+    # a parsed string is a document (it expands to nothing), not a URL
+    expanded = expand_column(df).orderBy("doc_id").collect()
+    for r in expanded[1:]:
+        assert r["jsonld_error"] is None and json.loads(r["expanded"]) == []
     rows = to_rdf_rows(df).collect()
     by_doc = {}
     for r in rows:
@@ -155,12 +197,32 @@ def test_to_rdf_rows_non_dict_documents(spark):  # noqa: F811
     # null / bare scalar: no triples at all (expand → []), no crash
     assert 1 not in by_doc
     assert 2 not in by_doc
+    assert 3 not in by_doc
+
+
+def test_to_rdf_rows_match_api_to_rdf_on_edge_contexts(spark):  # noqa: F811
+    """A non-propagating top-level context yields the API's triples,
+    and a context with two invalid terms quarantines with the API's code
+    (contexts are processed in the document's own key order)."""
+    from jsonld_ex_spark.core.api import to_rdf
+    from jsonld_ex_spark.core.errors import JsonLdError
+    from jsonld_ex_spark.core.rdf import quad_row
+
+    two_invalid = {"@context": {"z": {"@reverse": 5}, "a": {"@id": "http://x", "@language": 5}},
+                   "a": "v"}
+    rows = to_rdf_rows(_df(spark, [NO_PROPAGATE_DOC, two_invalid])).collect()
+    got = sorted(tuple(r)[1:] for r in rows if r["doc_id"] == 0)
+    assert got and got == sorted(quad_row(q) for q in to_rdf(NO_PROPAGATE_DOC, Options()))
+    with pytest.raises(JsonLdError) as api_error:
+        to_rdf(two_invalid, Options())
+    [marker] = [r for r in rows if r["doc_id"] == 1]
+    assert marker["pred"] == QUARANTINE_PRED
+    assert marker["obj"] == api_error.value.code == "invalid IRI mapping"
 
 
 def test_frame_column_matches_core(spark):  # noqa: F811
     """Distributed framing must agree per-document with core frame()."""
     from jsonld_ex_spark.core.api import frame as frame_core
-    from jsonld_ex_spark.operators.jsonld_ops import frame_column
 
     frame_doc = {
         "@context": {"@vocab": "http://ex.org/v#"},
