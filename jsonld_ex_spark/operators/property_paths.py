@@ -50,11 +50,14 @@ closure falls back to PATH DOUBLING, as does every standalone closure:
 R ∪ R∘R per superstep, all-pairs reachability over the path's edge set
 in ceil(log2 diameter) supersteps, NOT one-hop-per-round, with
 per-round set-dedup as the map-side-combinable aggregate and a
-count-fixpoint stop, so cyclic graphs terminate (the rdf:list pointer-doubling walker would
-raise on a cycle; reachability is well-defined on one).  Like
-graph_paths, the whole evaluation materializes under
-``capped_shuffle_width``: closure inputs (one predicate's edge set)
-are small relative to the triple table.
+count-fixpoint stop, so cyclic graphs terminate (a cyclic rdf:list
+has no positions, so graph_paths.chain_positions raises on one, but
+reachability is well-defined on it).  The same two tiers serve
+chain_positions: its label tier is :func:`_chain_closure` from each
+list's entry cell.  Like graph_paths' doubling fallback, the whole
+evaluation materializes under ``capped_shuffle_width``: closure
+inputs (one predicate's edge set) are small relative to the triple
+table.
 
 The DuckDB oracle mirror (:func:`path_oracle_sql`) compiles the same
 AST to plain SQL, with ``WITH RECURSIVE`` (UNION = set semantics)

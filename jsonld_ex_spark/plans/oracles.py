@@ -307,7 +307,8 @@ def kg_bgp_turn_tools_oracle() -> str:
 def kg_list_walk_oracle() -> str:
     """List positions re-derived with a recursive CTE over the
     relational triple oracle — one hop per recursion level (DuckDB's
-    sequential walk) vs the Spark side's pointer doubling."""
+    sequential walk) vs the Spark side's positions read off the cell
+    labels (graph_paths.chain_positions)."""
     return f"""
 WITH RECURSIVE trip AS ({kg_triples_oracle()}),
 edges AS (
@@ -728,15 +729,16 @@ def kg_bgp_top_entities_oracle() -> str:
     )
 
 
+# ``?conv v:turns/rdf:rest*/rdf:first ?turn``, every turn of every
+# conversation: shared with operators/kg_queries.py like the BGP
+# pattern lists above
+CONV_TURNS_PATH = ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF}rest>"), f"<{RDF}first>")
+
+
 def kg_path_conv_turns_oracle() -> str:
     from jsonld_ex_spark.operators.property_paths import path_oracle_sql
 
-    return path_oracle_sql(
-        kg_triples_oracle(),
-        "?conv",
-        ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF}rest>"), f"<{RDF}first>"),
-        "?turn",
-    )
+    return path_oracle_sql(kg_triples_oracle(), "?conv", CONV_TURNS_PATH, "?turn")
 
 
 def kg_path_tool_turns_oracle() -> str:
@@ -746,11 +748,7 @@ def kg_path_tool_turns_oracle() -> str:
         kg_triples_oracle(),
         [("?turn", f"<{VOCAB}tool>", "?toolname")],
         project=["conv", "turn", "toolname"],
-        paths=[(
-            "?conv",
-            ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF}rest>"), f"<{RDF}first>"),
-            "?turn",
-        )],
+        paths=[("?conv", CONV_TURNS_PATH, "?turn")],
     )
 
 
@@ -797,11 +795,7 @@ def kg_path_filtered_nontool_turns_oracle() -> str:
         kg_triples_oracle(),
         [("?turn", f"<{VOCAB}role>", "?role")],
         project=["conv", "turn", "role"],
-        paths=[(
-            "?conv",
-            ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF}rest>"), f"<{RDF}first>"),
-            "?turn",
-        )],
+        paths=[("?conv", CONV_TURNS_PATH, "?turn")],
         filters=[("conv", "regex", "[0-4]$")],
         not_exists=[[("?turn", f"<{VOCAB}tool>", "?tname")]],
     )

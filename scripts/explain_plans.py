@@ -99,10 +99,14 @@ COMMENT = {
         "co-partitioned (zero shuffle)."
     ),
     "kg_list_walk": (
-        "Pointer-doubling list walk: per superstep ONE equi-join of "
-        "the frontier with the jump table + ONE jump-table "
-        "self-composition, both localCheckpointed (lineage truncation); "
-        "ceil(log2 L)+1 supersteps total — not O(L)."
+        "List walk read off the labels: one aggregate checks that the "
+        "rdf:rest edges are positional (_:<conv>.<i> → _:<conv>.<i+1>), "
+        "then the walk is one Catalyst plan — one aggregate per "
+        "conversation, one join and a sequence explode from each "
+        "list's entry cell, positions as label differences, the "
+        "rdf:first join — memoized as a checkpoint (the scan below). "
+        "No doubling superstep, no Python; pointer doubling is only "
+        "the fallback for graphs whose labels are not positional."
     ),
     "kg_construct_entity_edges": (
         "CONSTRUCT: BGP binding scan fanned into template projections, "

@@ -1,6 +1,8 @@
-"""Pointer-doubling list walker: superstep bound, cycle guard, and
-cross-validation of graph-derived positions against the turn indices
-embedded in the IRIs (which the walker never looks at).
+"""The pointer-doubling list walk (chain_positions' fallback, taken
+here because ``c<i>`` cells carry no positional label): superstep
+bound and cycle guard; and cross-validation of graph-derived positions
+against the turn indices embedded in the IRIs (which the walker never
+looks at).  tests/test_property_paths.py compares the two tiers.
 """
 
 from __future__ import annotations
@@ -38,16 +40,25 @@ def test_long_chain_converges_in_log_supersteps(spark):  # noqa: F811
 
 
 def test_known_bound_walk_matches_detection_loop(spark):  # noqa: F811
-    """known_max_length runs exactly ceil(log2(L)) supersteps with no
-    per-round driver action and must return the identical position set
-    as the emptiness-detection loop — for exact powers of two, off-by-
-    one lengths, and a bound looser than the actual chain."""
-    for n, bound in [(1, 1), (2, 2), (8, 8), (9, 9), (5, 40)]:
-        triples = _chain_df(spark, n)
-        heads = spark.createDataFrame([("L", "c0")], "head string, cell string")
-        out = chain_positions(triples, heads, known_max_length=bound)
+    """The superstep bound the walk derives from the rest-edge count
+    must yield the full position set for exact powers of two and
+    off-by-one lengths, and when the bound is looser than the walked
+    chain (an unreached 39-edge chain inflates the count)."""
+    heads = spark.createDataFrame([("L", "c0")], "head string, cell string")
+    for n in (1, 2, 8, 9):
+        out = chain_positions(_chain_df(spark, n), heads)
         got = {(r["position"], r["member"]) for r in out.collect()}
-        assert got == {(i, f"m{i}") for i in range(n)}, (n, bound)
+        assert got == {(i, f"m{i}") for i in range(n)}, n
+    unreached = _chain_df(spark, 40).withColumn(
+        "subj", F.concat(F.lit("y"), F.col("subj"))
+    ).withColumn(
+        "obj",
+        F.when(F.col("obj").startswith("c"), F.concat(F.lit("y"), F.col("obj")))
+        .otherwise(F.col("obj")),
+    )
+    out = chain_positions(_chain_df(spark, 5).unionByName(unreached), heads)
+    got = {(r["position"], r["member"]) for r in out.collect()}
+    assert got == {(i, f"m{i}") for i in range(5)}
 
 
 def test_cycle_raises_instead_of_hanging(spark):  # noqa: F811
@@ -110,10 +121,10 @@ def test_triangle_counting_on_known_graph(spark, monkeypatch):  # noqa: F811
 
 
 def test_no_bound_walk_derives_bound_without_per_round_probe(spark):  # noqa: F811
-    """With no known_max_length the walker derives the superstep count
-    from ONE edge-count aggregation (round-4 verdict item 7) — the old
-    fallback issued a per-superstep rdd.isEmpty() driver action.  Two
-    chains of different lengths under one call must both complete."""
+    """The doubling walk derives its superstep count from ONE edge-count
+    aggregation (round-4 verdict item 7) — the old fallback issued a
+    per-superstep rdd.isEmpty() driver action.  Two chains of different
+    lengths under one call must both complete."""
     t1 = _chain_df(spark, 6)
     t2 = _chain_df(spark, 3).withColumn(
         "subj", F.concat(F.lit("x"), F.col("subj"))
@@ -132,13 +143,3 @@ def test_no_bound_walk_derives_bound_without_per_round_probe(spark):  # noqa: F8
     # the x-chain's first-edges still point at unprefixed members m0..m2
     expect |= {("L2", i, f"m{i}") for i in range(3)}
     assert got == expect
-
-
-def test_underestimated_bound_raises_not_truncates(spark):  # noqa: F811
-    """Round-5 advice: a caller bound that underestimates the longest
-    chain must RAISE (verification superstep), never return silently
-    incomplete positions."""
-    triples = _chain_df(spark, 8)
-    heads = spark.createDataFrame([("L", "c0")], "head string, cell string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        chain_positions(triples, heads, known_max_length=4)

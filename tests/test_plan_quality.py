@@ -366,18 +366,23 @@ def test_label_local_closure_plans_are_lean(spark, monkeypatch):  # noqa: F811
     positional closure directly and deduplicates once, at the output
     (at most 3 shuffles, 5 parquet scans); DESCRIBE's reach evaluates
     the roots' BGP once, feeding the closure and the zero-length pairs
-    from one scan.  The pipeline's labels are positional, so neither
-    plan starts a Python worker."""
+    from one scan.  The gate's kg_list_walk, called first in a fresh
+    session memo, takes chain_positions' label tier: no doubling walk.
+    The pipeline's labels are positional, so no plan starts a Python
+    worker."""
     import re
+    from collections import OrderedDict
 
+    from jsonld_ex_spark.functions import partitioning
+    from jsonld_ex_spark.operators import graph_paths
     from jsonld_ex_spark.operators.bgp import bgp_describe
-    from jsonld_ex_spark.operators.graph_paths import RDF_NS
     from jsonld_ex_spark.operators.property_paths import eval_path
+    from jsonld_ex_spark.plans.oracles import CONV_TURNS_PATH
     from jsonld_ex_spark.sources.transcripts import VOCAB
 
     t = spark.read.parquet(kg_queries._persisted_triples_dir(spark, SF))
     plans = _checkpoint_plans(spark, monkeypatch)
-    eval_path(t, ("seq", f"<{VOCAB}turns>", ("star", f"<{RDF_NS}rest>"), f"<{RDF_NS}first>"))
+    eval_path(t, CONV_TURNS_PATH)
     (walk,) = plans
     assert walk.count("Exchange hashpartitioning") <= 3, walk
     assert walk.count("Scan parquet") <= 5, walk
@@ -389,5 +394,19 @@ def test_label_local_closure_plans_are_lean(spark, monkeypatch):  # noqa: F811
     # the roots' scan is the only one that reads ``pred``
     scans = re.findall(r"FileScan parquet \[([^\]]*)\]", reach)
     assert sum("pred#" in cols for cols in scans) == 1, reach
-    for plan in (walk, reach):
+
+    plans.clear()
+    monkeypatch.setattr(partitioning, "_SESSION_MEMO", OrderedDict())
+    walk_fixed, doubled = graph_paths._walk_fixed, []
+
+    def spy(*args):
+        doubled.append(args)
+        return walk_fixed(*args)
+
+    monkeypatch.setattr(graph_paths, "_walk_fixed", spy)
+    list_walk = _plan(kg_queries.kg_list_walk(spark, SF))
+    assert not doubled
+    # the memoized triples, then the memoized walk
+    (_, chain) = plans
+    for plan in (walk, reach, chain, list_walk):
         assert "MapInArrow" not in plan and "Python" not in plan, plan

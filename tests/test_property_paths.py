@@ -105,24 +105,20 @@ def test_path_validation(tiny):
 
 
 def test_gated_path_equals_list_walk_members(spark):  # noqa: F811
-    """The path query's (conv, turn) pair set must equal the
-    pointer-doubling list walk's — two different traversal engines over
-    the same graph encoding."""
-    from pyspark.sql import functions as F
+    """The gated path query answers from the list walk's (head, member)
+    projection; it must equal the generic evaluator's pair set for the
+    same path AST over the same triples.  Both read the runs through
+    the positional closure, but the walk positions cells from the list
+    heads while path_select composes v:turns, rest* and rdf:first as
+    path pairs and deduplicates; the gate's DuckDB oracle is the
+    independent engine."""
+    from jsonld_ex_spark.operators.kg_queries import _checkpointed_triples, kg_path_conv_turns
+    from jsonld_ex_spark.plans.oracles import CONV_TURNS_PATH
 
-    from jsonld_ex_spark.operators.kg_queries import (
-        kg_list_walk,
-        kg_path_conv_turns,
-    )
-
-    walk = (
-        kg_list_walk(spark, SF_DIR)
-        .select(F.col("conv_iri").alias("conv"), F.col("turn_iri").alias("turn"))
-        .dropDuplicates()
-    )
     path = kg_path_conv_turns(spark, SF_DIR)
-    assert path.count() == walk.count()
-    assert path.exceptAll(walk).count() == 0
+    generic = path_select(_checkpointed_triples(spark, SF_DIR), "?conv", CONV_TURNS_PATH, "?turn")
+    assert path.count() == generic.count() > 0
+    assert path.exceptAll(generic).count() == 0
 
 
 def test_mixed_path_and_pattern_bgp(tiny):
@@ -582,6 +578,108 @@ def test_property_positional_matches_doubling(spark, monkeypatch, rows):  # noqa
     for path, got in zip(LIST_PATHS, shipped):
         assert sorted(got) == _duck(path_oracle_sql(_cte(rows), "?s", path, "?o"))
     assert sorted(shipped[2]) == _duck(bgp_describe_oracle_sql(_cte(rows), _roots_sql(rows)))
+
+
+# --- chain_positions: the label tier vs its doubling fallback ---------------
+
+RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+
+
+def _list_walks(spark, rows, monkeypatch):
+    """graph_paths.chain_positions over ``rows`` with the list
+    predicates renamed to rdf:first/rdf:rest and the v:turns edges as
+    heads: whether the shipped call took the label tier (it never
+    reached ``_walk_fixed``), its rows, and the doubling reference's
+    rows (``_chain_check`` forced off), each as a Counter."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from jsonld_ex_spark.operators import graph_paths, property_paths
+
+    rdf = {f"{V}first": f"{RDF}first", f"{V}rest": f"{RDF}rest"}
+    df = spark.createDataFrame([(s, rdf.get(p, p), o, i) for s, p, o, i in rows], _SCHEMA)
+    heads = df.filter(F.col("pred") == f"{V}turns").select(
+        F.col("subj").alias("head"), F.col("obj").alias("cell")
+    )
+    walk, doubled = graph_paths._walk_fixed, []
+
+    def spy(*args):
+        doubled.append(args)
+        return walk(*args)
+
+    def rows_of(out):
+        return Counter(tuple(r) for r in out.collect())
+
+    with monkeypatch.context() as m:
+        m.setattr(graph_paths, "_walk_fixed", spy)
+        shipped = rows_of(graph_paths.chain_positions(df, heads))
+    with monkeypatch.context() as m:
+        m.setattr(
+            property_paths, "_chain_check",
+            lambda e: property_paths._ChainCheck(False, False),
+        )
+        doubling = rows_of(graph_paths.chain_positions(df, heads))
+    return not doubled, shipped, doubling
+
+
+@given(_positional_graph())
+@example(POSITIONAL_GRAPH)
+# a duplicated head edge and rdf:first triple, no duplicated rest edge
+@example(_conv("a", _bn("a", 2)) + [("urn:c:a", f"{V}turns", "_:a.0", True),
+                                    ("_:a.1", f"{V}first", "urn:t:a.1", True)])
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_list_positions_label_tier_matches_doubling(spark, monkeypatch, rows):  # noqa: F811
+    """Lists whose cells carry positional labels (empty, one-cell and
+    longer lists, two lists in one prefix, after a gap) take the label
+    tier, and it returns the doubling walk's (head, position, member)
+    rows: as a multiset, or as a set when an rdf:rest triple is
+    duplicated (the doubling bag under a duplicated rest edge is
+    arbitrary).  IRI-headed lists take the fallback."""
+    labelled, shipped, doubling = _list_walks(spark, rows, monkeypatch)
+    heads = [o for _, p, o, _ in rows if p == f"{V}turns"]
+    assert labelled == all(o.startswith("_:") or o == NIL for o in heads)
+    rest = [r for r in rows if r[1] == f"{V}rest"]
+    if len(set(rest)) == len(rest):
+        assert shipped == doubling
+    else:
+        assert set(shipped) == set(doubling)
+    assert shipped or not any(p == f"{V}first" for _, p, _, _ in rows)
+
+
+LIST_FALLBACKS = {
+    "iri_head": _iri_head_conv("g", 3),
+    "unprefixed": _conv("a", ["_:b0", "_:b1", "_:b2"]),
+    "suffix_gap": _conv("p", ["_:p.0", "_:p.1", "_:p.2", "_:p.3", "_:p.5"]),
+    "branch": _conv("p", _bn("p", 3), extra=[(0, 2)]),
+    "cross_document": _conv("p", _bn("p", 4) + ["_:q.4", "_:q.5"]),
+    # rest edges positional, but one head cell's label is not
+    "unpositional_head": _conv("a", _bn("a", 2))
+    + [("urn:c:z", f"{V}turns", "_:z.01", True), ("_:z.01", f"{V}first", "urn:t:z.0", True)],
+    # a rest edge into an IRI cell that has a member but no rest edge:
+    # the cell has no label to read its position off
+    "iri_tail": [
+        ("urn:c:t", f"{V}turns", "_:t.0", True),
+        ("_:t.0", f"{V}first", "urn:t:t.0", True),
+        ("_:t.0", f"{V}rest", "urn:cell:t", True),
+        ("urn:cell:t", f"{V}first", "urn:t:t.1", True),
+    ],
+}
+
+
+@pytest.mark.parametrize("name", sorted(LIST_FALLBACKS))
+def test_list_positions_fallback_inputs(spark, monkeypatch, name):  # noqa: F811
+    """Each input the label tier cannot read takes pointer doubling,
+    and every list member still gets its position."""
+    labelled, shipped, doubling = _list_walks(spark, LIST_FALLBACKS[name], monkeypatch)
+    assert not labelled
+    assert shipped == doubling
+    if name == "iri_tail":
+        assert set(shipped) == {("urn:c:t", 0, "urn:t:t.0"), ("urn:c:t", 1, "urn:t:t.1")}
 
 
 DUP_PATHS = [
